@@ -401,14 +401,17 @@ def test_versioned_stream_default_pacing_is_finite():
     """The streaming reader's max_versions_per_batch defaults to a
     FINITE 64 (VERDICT r4 #6): a consumer catching up over a long
     backlog pages by default; unbounded (0) is an explicit opt-out."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
     from unity_to_bigquery_spark.sources.versioned_stream import (
         VersionedTableStreamReader,
     )
 
-    r = VersionedTableStreamReader({"path": "/nonexistent"})
+    schema = StructType([StructField("k", IntegerType())])
+    r = VersionedTableStreamReader({"path": "/nonexistent"}, schema)
     assert r.max_versions == 64
     r0 = VersionedTableStreamReader(
-        {"path": "/nonexistent", "max_versions_per_batch": "0"}
+        {"path": "/nonexistent", "max_versions_per_batch": "0"}, schema
     )
     assert r0.max_versions == 0  # explicit opt-out still available
 

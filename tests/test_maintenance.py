@@ -1,108 +1,7 @@
-"""Table-maintenance semantics: keyed upsert rewrites only affected
-partitions, compaction is data-identical, schema evolution reads old+new
-batches."""
+"""Writer layout controls for parquet sinks: bounded file sizes,
+partition-local sorts, and SQL DISTRIBUTE BY / SORT BY plans."""
 
 from __future__ import annotations
-
-import os
-
-import pyspark.sql.functions as F
-
-from unity_to_bigquery_spark.catalog import load_table
-from unity_to_bigquery_spark.plans.maintenance import (
-    compact_partitions,
-    read_with_schema_evolution,
-    upsert_partitioned,
-)
-
-
-def _write_events_table(spark, sf_dir, path):
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "dt", F.date_format("ts", "yyyy-MM-dd")
-    )
-    events.write.mode("overwrite").partitionBy("dt").parquet(path)
-    return events
-
-
-def test_upsert_replaces_keys_and_appends(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "tbl")
-    events = _write_events_table(spark, sf_dir, path)
-    before = spark.read.parquet(path)
-    n_before = before.count()
-
-    # updates: change value for 5 existing events on one day + add 2 new ids
-    day = "2024-01-03"
-    upd_exist = (
-        before.filter(F.col("dt") == day)
-        .limit(5)
-        .withColumn("value", F.lit(-1.0))
-    )
-    upd_new = upd_exist.limit(2).withColumn(
-        "event_id", F.col("event_id") + 10_000_000
-    )
-    updates = upd_exist.unionByName(upd_new)
-
-    # snapshot untouched partitions' file mtimes to prove they're not rewritten
-    untouched = os.path.join(path, "dt=2024-01-10")
-    mtimes_before = {f: os.path.getmtime(os.path.join(untouched, f)) for f in os.listdir(untouched)}
-
-    upsert_partitioned(spark, path, updates, key_cols=["event_id"], partition_col="dt")
-
-    after = spark.read.parquet(path)
-    assert after.count() == n_before + 2
-    assert after.filter(F.col("value") == -1.0).count() == 7
-    # replaced keys exist exactly once
-    dup = after.groupBy("event_id").count().filter(F.col("count") > 1).count()
-    assert dup == 0
-    # untouched partition files were not rewritten
-    mtimes_after = {f: os.path.getmtime(os.path.join(untouched, f)) for f in os.listdir(untouched)}
-    assert mtimes_before == mtimes_after
-
-
-def test_compaction_preserves_data(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "tbl")
-    events = load_table(spark, sf_dir, "events").withColumn(
-        "dt", F.date_format("ts", "yyyy-MM-dd")
-    )
-    # fragment: 8 files per partition
-    events.repartition(8).write.mode("overwrite").partitionBy("dt").parquet(path)
-    n_rows_before = spark.read.parquet(path).count()
-    day_dir = [d for d in os.listdir(path) if d.startswith("dt=")][0]
-    n_files_before = len([f for f in os.listdir(os.path.join(path, day_dir)) if f.endswith(".parquet")])
-    assert n_files_before > 1
-    checksum_before = (
-        spark.read.parquet(path).agg(F.sum(F.hash("event_id", "event_type"))).collect()[0][0]
-    )
-
-    compact_partitions(spark, path, "dt", target_files_per_partition=1)
-
-    n_files_after = len(
-        [f for f in os.listdir(os.path.join(path, day_dir)) if f.endswith(".parquet")]
-    )
-    assert n_files_after < n_files_before
-    checksum_after = (
-        spark.read.parquet(path).agg(F.sum(F.hash("event_id", "event_type"))).collect()[0][0]
-    )
-    assert checksum_before == checksum_after
-    assert spark.read.parquet(path).count() == n_rows_before
-
-
-def test_schema_evolution_reads_old_and_new(spark, sf_dir, tmp_path):
-    path = str(tmp_path / "tbl")
-    old = load_table(spark, sf_dir, "events").select("event_id", "event_type")
-    old.write.mode("overwrite").parquet(path)
-    new = (
-        load_table(spark, sf_dir, "events")
-        .select("event_id", "event_type")
-        .withColumn("event_id", F.col("event_id") + 10_000_000)
-        .withColumn("schema_version", F.lit(2))
-    )
-    new.write.mode("append").parquet(path)
-
-    merged = read_with_schema_evolution(spark, path)
-    assert "schema_version" in merged.columns
-    assert merged.filter(F.col("schema_version").isNull()).count() == old.count()
-    assert merged.filter(F.col("schema_version") == 2).count() == old.count()
 
 
 def test_writer_controls_sorted_bounded_files(spark, sf_dir, tmp_path):

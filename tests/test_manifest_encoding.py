@@ -1,5 +1,5 @@
 """Round-10 manifest encoding (VERDICT r9 #1): delta manifests +
-parquet checkpoints + vectorized pruning.
+parquet checkpoints.
 
 The contract under test: a table whose log is delta-encoded (forced
 via manifest_inline_max=0) behaves BIT-IDENTICALLY to the inline
@@ -153,47 +153,6 @@ def test_legacy_inline_log_migration(spark, tmp_path):
     # and back: a third handle with inline defaults still reads all
     back = VersionedTable(spark, root)
     assert _rows(back.read()) == [(2, "b"), (3, "c")]
-
-
-def test_vectorized_prune_matches_python_loop(spark, tmp_path):
-    """The Arrow prune path is semantics-identical to the Python loop
-    (range + partition-tuple + IN-list, including files without
-    stats)."""
-    import datetime as dt
-
-    root = str(tmp_path / "t")
-    t = VersionedTable(spark, root, partition_spec=["day(ts)", "bucket(4, s)"])
-    rows = [
-        (i, f"s{i % 5}", dt.datetime(2024, 3, 1 + i % 4, 9))
-        for i in range(40)
-    ]
-    t.commit_append(
-        spark.createDataFrame(rows, "k INT, s STRING, ts TIMESTAMP")
-    )
-    m = t.manifest()
-    cases_range = [(0, 9), (15, 22), (None, 5), (38, None), (100, 200)]
-    for lo, hi in cases_range:
-        loop = t._prune(m, "k", lo, hi)
-        t._VEC_THRESHOLD = 1  # force Arrow path on this instance
-        vec = t._prune(m, "k", lo, hi)
-        del t._VEC_THRESHOLD
-        assert (sorted(loop[0]), loop[1]) == (sorted(vec[0]), vec[1]), (lo, hi)
-    for filt in (
-        {"s": "s1"},
-        {"s": ["s0", "s3"]},
-        {"ts": dt.date(2024, 3, 2)},
-        {"s": "s2", "ts": dt.date(2024, 3, 3)},
-    ):
-        loop = t._prune_parts(m, filt)
-        t._VEC_THRESHOLD = 1
-        vec = t._prune_parts(m, filt)
-        del t._VEC_THRESHOLD
-        assert (sorted(loop[0]), loop[1]) == (sorted(vec[0]), vec[1]), filt
-    # pruned reads stay exact under the vec path
-    t._VEC_THRESHOLD = 1
-    got = _rows(t.read_pruned("k", 10, 19))
-    del t._VEC_THRESHOLD
-    assert got == _rows(t.read().filter("k BETWEEN 10 AND 19"))
 
 
 def test_branch_on_delta_log(spark, tmp_path):

@@ -14,9 +14,11 @@ QUERIES = all_queries()
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
-def test_query_matches_oracle(name, spark, duck, sf_dir):
+def test_query_matches_oracle(name, spark, duck, sf_dir, built_queries):
     q = QUERIES[name]
     df = q.spark(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    built_queries[name] = (df.schema, plan)
     if q.oracle is None:
         # rows-only check (mirrors the driver's weaker path)
         n = df.count()

@@ -206,32 +206,25 @@ def _provably_scalar(subtree: str) -> bool:
 
 # Building a declared query's DataFrame executes its demo body (the
 # lakehouse/index demos commit state before returning a plan), so one
-# pass over all 335 queries costs minutes at sf0.001. The three
+# pass over all 335 queries costs minutes at sf0.001. The two
 # whole-inventory audits below (slow-path plan audit, primitive-output
-# audit, BNLJ scalar-proof audit) used to build that inventory once
-# EACH (~260 s per pass, r14 pytest --durations); sharing one build
-# keeps all three audits' coverage at one pass's cost — this is the
-# r14 "keep the suite inside the driver's pytest budget" fix
-# (VERDICT r13 #1), not a coverage change.
-_AUDIT_CACHE: dict = {}
-
-
-def _audit_inventory(spark, sf_dir):
-    if "dfs" not in _AUDIT_CACHE:
-        from unity_to_bigquery_spark.registry import all_queries
-
-        _AUDIT_CACHE["dfs"] = {
-            name: q.spark(spark, sf_dir)
-            for name, q in sorted(all_queries().items())
-        }
-    return _AUDIT_CACHE["dfs"]
+# audit) read the builds test_oracle recorded in ``built_queries``.
+def _audit_inventory(spark, sf_dir, built):
+    """Every declared query as (schema, physical plan string taken
+    before it ran); a query test_oracle did not build is built here."""
+    for name, q in sorted(QUERIES.items()):
+        if name not in built:
+            df = q.spark(spark, sf_dir)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            built[name] = (df.schema, plan)
+    return {name: built[name] for name in sorted(QUERIES)}
 
 
 def test_bnlj_scalar_allowlist_build_sides_provably_one_row(spark, sf_dir):
-    dfs = _audit_inventory(spark, sf_dir)
     bad = []
     for name in sorted(BNLJ_SCALAR_PROOF):
-        plan = dfs[name]._jdf.queryExecution().executedPlan()
+        df = QUERIES[name].spark(spark, sf_dir)
+        plan = df._jdf.queryExecution().executedPlan()
         builds = []
         _walk_bnlj_build_sides(plan, builds)
         if not builds:
@@ -242,10 +235,9 @@ def test_bnlj_scalar_allowlist_build_sides_provably_one_row(spark, sf_dir):
     assert not bad, bad
 
 
-def test_no_unexpected_slow_paths_in_any_plan(spark, sf_dir):
+def test_no_unexpected_slow_paths_in_any_plan(spark, sf_dir, built_queries):
     offenders = {"BatchEvalPython": [], "CartesianProduct": [], "BroadcastNestedLoopJoin": []}
-    for name, df in _audit_inventory(spark, sf_dir).items():
-        phys = df._jdf.queryExecution().executedPlan().toString()
+    for name, (_schema, phys) in _audit_inventory(spark, sf_dir, built_queries).items():
         if "BatchEvalPython" in phys and name not in ROW_PYTHON_ALLOWED:
             offenders["BatchEvalPython"].append(name)
         if "CartesianProduct" in phys:
@@ -255,7 +247,7 @@ def test_no_unexpected_slow_paths_in_any_plan(spark, sf_dir):
     assert not any(offenders.values()), offenders
 
 
-def test_all_query_outputs_are_primitive(spark, sf_dir):
+def test_all_query_outputs_are_primitive(spark, sf_dir, built_queries):
     """Hard rule 4: declared-query outputs are primitives only — no
     array/struct/map/binary/decimal/timestamp column survives to the
     driver's cross-engine hash compare."""
@@ -264,8 +256,8 @@ def test_all_query_outputs_are_primitive(spark, sf_dir):
         "long", "integer", "smallint", "tinyint", "float", "date",
     }
     bad = []
-    for name, df in _audit_inventory(spark, sf_dir).items():
-        for f in df.schema.fields:
+    for name, (schema, _plan) in _audit_inventory(spark, sf_dir, built_queries).items():
+        for f in schema.fields:
             t = f.dataType.simpleString()
             if t not in allowed:
                 bad.append((name, f.name, t))

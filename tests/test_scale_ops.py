@@ -1,6 +1,6 @@
-"""Scale-path operators: salted aggregation/join equivalence and
-bucketed-join shuffle elimination (the 100 TB design levers, exercised
-and plan-verified at test scale).
+"""Scale-path operators: salted aggregation/join equivalence, global
+enumeration, approximate percentiles and top-k per key, exercised at
+test scale.
 """
 
 from __future__ import annotations
@@ -9,7 +9,6 @@ import pyspark.sql.functions as F
 
 from unity_to_bigquery_spark.catalog import load_table
 from unity_to_bigquery_spark.operators.skew import replicated_salt_join, salted_aggregate
-from unity_to_bigquery_spark.plans.bucketing import bucketed_join, write_bucketed
 
 
 def test_salted_aggregate_equals_direct(spark, sf_dir):
@@ -42,36 +41,6 @@ def test_replicated_salt_join_equals_plain(spark, sf_dir):
     g1 = {r.o_orderpriority: r.n for r in salted.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")).collect()}
     g2 = {r.o_orderpriority: r.n for r in plain.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert g1 == g2
-
-
-def test_bucketed_join_elides_shuffle(spark, sf_dir):
-    write_bucketed(
-        load_table(spark, sf_dir, "orders"), "orders_b", "o_orderkey", n_buckets=8
-    )
-    write_bucketed(
-        load_table(spark, sf_dir, "lineitem"), "lineitem_b", "l_orderkey", n_buckets=8
-    )
-    # At toy scale Catalyst prefers broadcasting the small side (and
-    # rightly so) — disable broadcast so the bucketed path is planned,
-    # as it would be for two 100 TB fact tables.
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "orders_b", "lineitem_b", "o_orderkey", "l_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    assert "Exchange hashpartitioning" not in plan, f"bucketed join still shuffles:\n{plan[:800]}"
-    assert "Bucketed: true" in plan, f"bucketed scan not used:\n{plan[:800]}"
-    # correctness: same row count as the shuffled join
-    plain = (
-        load_table(spark, sf_dir, "orders")
-        .join(
-            load_table(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-    )
-    assert joined.count() == plain.count()
 
 
 def test_global_enumerate_is_exact_total_order(spark, sf_dir):

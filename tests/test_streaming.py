@@ -1030,7 +1030,8 @@ def test_versioned_stream_rejects_emit_changes_plus_skip_deletes(spark, tmp_path
                 "path": str(tmp_path / "tbl"),
                 "emit_change_types": "true",
                 "skip_delete_commits": "true",
-            }
+            },
+            t.read().schema,
         )
 
 
@@ -1517,7 +1518,8 @@ def test_versioned_streaming_source_starting_version_validated(spark, tmp_path):
 
     def reader(sv):
         return VersionedTableStreamReader(
-            {"path": str(tmp_path / "tbl"), "starting_version": str(sv)}
+            {"path": str(tmp_path / "tbl"), "starting_version": str(sv)},
+            t.read().schema,
         )
 
     with pytest.raises(ValueError, match="out of range"):
@@ -2226,7 +2228,8 @@ def test_versioned_stream_reads_a_branch(spark, tmp_path):
     )
     with _pytest.raises(ValueError, match="no branch"):
         VersionedTableStreamReader(
-            {"path": str(tmp_path / "tbl"), "branch": "nope"}
+            {"path": str(tmp_path / "tbl"), "branch": "nope"},
+            spark.createDataFrame([], "k INT, v STRING").schema,
         )
 
 
@@ -2363,12 +2366,11 @@ def test_stream_multi_file_partition_packing(spark, tmp_path):
 
 
 def test_stream_arrow_fast_path_no_fallback(spark, tmp_path):
-    """The vectorized stream executor (_read_arrow) must handle the CDC
-    semantics set DIRECTLY — insert frames, delete retractions
-    (match_any), eq-anti exclusion, pos-delete ordinals, row-lineage
-    ids (phys AND base+ordinal) — with no silent row-loop fallback
-    (calls it without the try/except) and bit-equal rows vs the row
-    loop itself."""
+    """The Arrow stream executor handles the CDC semantics set — insert
+    frames, delete retractions (match_any), eq-anti exclusion,
+    pos-delete ordinals, row-lineage ids (phys AND base+ordinal) — and
+    the union of its partitions equals the batch changes_with_type
+    feed, lineage ids and change columns included."""
     from unity_to_bigquery_spark.plans.versioned import VersionedTable
     from unity_to_bigquery_spark.sources.versioned_stream import (
         VersionedTableDataSource,
@@ -2396,16 +2398,13 @@ def test_stream_arrow_fast_path_no_fallback(spark, tmp_path):
     schema_ddl = ds.schema()
     struct = spark.createDataFrame([], schema_ddl).schema
     sr = VersionedTableStreamReader(opts, struct)
-    assert sr._pa_schema is not None
     parts = sr._cdc_partitions(0, t.latest_version(), t.manifest())
     assert any(isinstance(p, _CDCFilePartition) for p in parts)
-    got = set()
+    got = []
     for p in parts:
-        out = sr._read_arrow(p)  # raises on any fallback shape
-        got |= {tuple(r.values()) for r in out.to_pylist()}
-        # bit-equality against the row loop for the same partition
-        row_sr = VersionedTableStreamReader(opts)  # no schema: row path
-        assert {tuple(r) for r in row_sr.read(p)} == {
-            tuple(r.values()) for r in out.to_pylist()
-        }
-    assert got  # the window is non-trivial
+        for batch in sr.read(p):
+            got += [tuple(r.values()) for r in batch.to_pylist()]
+    want = t.changes_with_type(0)
+    assert want.columns == struct.fieldNames()
+    assert sorted(got, key=repr) == sorted(map(tuple, want.collect()), key=repr)
+    assert {r[-2] for r in got} == {"insert", "delete"}

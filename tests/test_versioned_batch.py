@@ -202,11 +202,10 @@ def test_sql_front_door_time_travel(spark, root):
 
 
 def test_batch_arrow_fast_path_no_fallback(spark, root):
-    """The vectorized executor (_read_arrow) must handle the full
-    non-struct semantics set DIRECTLY — eq-deletes (null keys never
-    match), positional deletes, rename, additive evolution NULL-fill,
-    initial default, int→long promotion — with no silent row-loop
-    fallback (this calls it without the try/except)."""
+    """The Arrow executor handles the full semantics set — eq-deletes
+    (null keys never match), positional deletes, rename, additive
+    evolution NULL-fill, initial default, int→long promotion — and
+    its RecordBatches equal the programmatic read()."""
     from unity_to_bigquery_spark.sources.versioned_batch import (
         make_batch_reader,
     )
@@ -227,9 +226,8 @@ def test_batch_arrow_fast_path_no_fallback(spark, root):
     assert reader._pa_schema is not None
     rows = set()
     for part in reader.partitions():
-        for spec in getattr(part, "items", [part]):  # packed (r14)
-            out = reader._read_arrow(spec)  # raises on any fallback shape
-            rows |= {tuple(r.values()) for r in out.to_pylist()}
+        for batch in reader.read(part):
+            rows |= {tuple(r.values()) for r in batch.to_pylist()}
     assert rows == {tuple(r) for r in t.read().collect()}
 
 
@@ -241,3 +239,85 @@ def test_batch_empty_snapshot_and_schemaless(spark, root, tmp_path):
     VersionedTable(spark, str(tmp_path / "never"))
     with pytest.raises(Exception, match="empty/schemaless"):
         _ds(spark, str(tmp_path / "never")).count()
+
+
+def test_nested_struct_rename_and_default_through_dsv2(spark, root, tmp_path):
+    """A struct member renamed through the nested field-ID mapping and a
+    struct column with an initial default read the same through the
+    batch relation, an availableNow stream and the change feed as
+    through read() / changes_with_type()."""
+    t = VersionedTable(spark, root)
+    t.commit_append(
+        spark.createDataFrame(
+            [(i, (i * 10, f"n{i}")) for i in range(4)],
+            "k INT, props STRUCT<val: INT, note: STRING>",
+        ).coalesce(1)
+    )
+    t.rename_nested_field("props", "val", "units")
+    t.commit_append(
+        spark.createDataFrame(
+            [(10 + i, (i * 100, None)) for i in range(3)] + [(20, None)],
+            "k INT, props STRUCT<units: INT, note: STRING>",
+        ).coalesce(1)
+    )
+    t.add_column(
+        "meta", "struct<a:int,b:string>",
+        default="named_struct('a', 7, 'b', 'x')",
+    )
+    t.commit_append(
+        spark.createDataFrame(
+            [(30, (1, "z"), (8, "y")), (31, (2, None), None)],
+            "k INT, props STRUCT<units: INT, note: STRING>, "
+            "meta STRUCT<a: INT, b: STRING>",
+        ).coalesce(1)
+    )
+
+    def canon(df):
+        return sorted(repr(r) for r in df.collect())
+
+    want = canon(t.read())
+    assert t.read().filter("k = 2").first().props.units == 20
+    assert t.read().filter("k = 2").first().meta.a == 7
+    assert canon(_ds(spark, root)) == want
+    q = (
+        spark.readStream.format("versioned_table")
+        .option("path", root)
+        .load()
+        .writeStream.format("memory")
+        .queryName("nested_struct_dsv2")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    assert canon(spark.table("nested_struct_dsv2")) == want
+    # a delete after the default: retractions of pre-default rows
+    # carry the default, like the batch feed
+    t.commit_delete_where(spark.createDataFrame([(1,), (31,)], "k INT"), "k")
+    cdf = _ds(spark, root, readChangeFeed="true", startingVersion=0)
+    # the batch feed's union appends columns added mid-window last
+    assert canon(cdf) == canon(t.changes_with_type(0).select(*cdf.columns))
+
+
+def test_reader_rejects_schema_without_arrow_type(root):
+    """A declared type with no Arrow equivalent fails reader
+    construction with an error naming the column and type."""
+    from pyspark.sql.types import (
+        IntegerType,
+        StructField,
+        StructType,
+        YearMonthIntervalType,
+    )
+
+    from unity_to_bigquery_spark.sources.versioned_batch import (
+        make_batch_reader,
+    )
+
+    schema = StructType([
+        StructField("k", IntegerType()),
+        StructField("span", YearMonthIntervalType()),
+    ])
+    with pytest.raises(
+        ValueError, match="column 'span' of type interval year to month"
+    ):
+        make_batch_reader({"path": root}, schema)

@@ -112,7 +112,46 @@ def _empty_like(spark: SparkSession, table: VersionedTable) -> DataFrame:
     )
 
 
-class AnnIndex:
+def _vec_dim(df: DataFrame, vec_col: str) -> int:
+    """Vector dimension, probed from the first row of ``df``."""
+    return df.select(F.size(vec_col).alias("d")).first()["d"]
+
+
+class _CellCentroids:
+    """Centroid-state readers shared by the cell-partitioned indexes
+    (:class:`AnnIndex`, :class:`IvfPqIndex`): both store fine centroids
+    in ``self.centroids`` and, under ``scorer="ivf2"``, coarse ones in
+    ``self.coarse``."""
+
+    def centroid_frame(self) -> DataFrame:
+        """Stored centroids in the (id_col, vec_col) shape the
+        similarity kernels consume."""
+        return self.centroids.read().select(
+            F.col("cell_id").alias(self.id_col),
+            F.col("centroid").alias(self.vec_col),
+        )
+
+    def _scorer_state(self) -> dict:
+        """The stored centroid structures the assignment scorer reads —
+        resolved ONCE per refresh/serve (flat: the fine centroid frame;
+        ivf2: + coarse centroids and the fine→coarse broadcast map)."""
+        st = {"cents": self.centroid_frame()}
+        if self.scorer == "ivf2":
+            st["coarse"] = self.coarse.read().select(
+                "coarse_id", F.col("centroid").alias(self.vec_col)
+            )
+            fine = self.centroids.read().select(
+                F.col("cell_id").alias("fine_id"),
+                F.col("centroid").alias(self.vec_col),
+            )
+            f2c = self.centroids.read().select(
+                F.col("cell_id").alias("fine_id"), "coarse_id"
+            )
+            st["fine_vecs"] = ivf2_fine_vecs(fine, f2c, self.vec_col)
+        return st
+
+
+class AnnIndex(_CellCentroids):
     """Persisted IVF index over an append-only VersionedTable of
     embeddings. See module docstring for the protocol; the short form:
 
@@ -184,33 +223,6 @@ class AnnIndex:
         """Source version the index reflects (0 = never built) — the
         Delta txn bookmark on the assignments table."""
         return self.assignments.manifest().get("txns", {}).get(_APP, 0)
-
-    def centroid_frame(self) -> DataFrame:
-        """Stored centroids in the (id_col, vec_col) shape the
-        similarity kernels consume."""
-        return self.centroids.read().select(
-            F.col("cell_id").alias(self.id_col),
-            F.col("centroid").alias(self.vec_col),
-        )
-
-    def _scorer_state(self) -> dict:
-        """The stored centroid structures the assignment scorer reads —
-        resolved ONCE per refresh/serve (flat: the fine centroid frame;
-        ivf2: + coarse centroids and the fine→coarse broadcast map)."""
-        st = {"cents": self.centroid_frame()}
-        if self.scorer == "ivf2":
-            st["coarse"] = self.coarse.read().select(
-                "coarse_id", F.col("centroid").alias(self.vec_col)
-            )
-            fine = self.centroids.read().select(
-                F.col("cell_id").alias("fine_id"),
-                F.col("centroid").alias(self.vec_col),
-            )
-            f2c = self.centroids.read().select(
-                F.col("cell_id").alias("fine_id"), "coarse_id"
-            )
-            st["fine_vecs"] = ivf2_fine_vecs(fine, f2c, self.vec_col)
-        return st
 
     def _best_cells(self, vecs: DataFrame, st: dict) -> DataFrame:
         """(id, cell_id, sim6) under the configured scorer: flat O(C)
@@ -615,9 +627,6 @@ class PqIndex:
     def indexed_version(self) -> int:
         return self.codes.manifest().get("txns", {}).get(_PQ_APP, 0)
 
-    def _dim(self, df: DataFrame) -> int:
-        return df.select(F.size(self.vec_col).alias("d")).first()["d"]
-
     def _code_rows(self, vecs: DataFrame, books: DataFrame, v: int) -> DataFrame:
         """Encode L2-normalized ``vecs`` against ``books``; one row per
         (vector, subspace) with the quantization error retained for
@@ -630,7 +639,7 @@ class PqIndex:
                         vec_col=self.vec_col)
         # err6: ||u_sub - c||^2 of the CHOSEN code, via one more
         # broadcast position join on (sub, code)
-        dim = self._dim(vecs)
+        dim = _vec_dim(vecs, self.vec_col)
         width = dim // self.m
         flat = (
             un.select(self.id_col, F.posexplode(F.col(self.vec_col)).alias("p0", "v"))
@@ -743,7 +752,7 @@ class PqIndex:
         books = self.codebooks.read()
         codes = self.codes.read().select(self.id_col, "sub", "code")
         corpus = self.source.read(v).select(self.id_col, self.vec_col)
-        dim = self._dim(corpus)
+        dim = _vec_dim(corpus, self.vec_col)
         return pq_adc_search(
             codes, books, corpus, queries, dim,
             k=k, m=self.m, shortlist=shortlist,
@@ -779,7 +788,7 @@ class PqIndex:
 _IVFPQ_APP = "ivfpq-index"
 
 
-class IvfPqIndex:
+class IvfPqIndex(_CellCentroids):
     """Persisted IVF-PQ index — the COMPOSITION of :class:`AnnIndex`'s
     inverted-list layout and :class:`PqIndex`'s product-quantized codes
     (VERDICT r8 #4, the 1e9-vector memory story): AnnIndex stores raw
@@ -861,34 +870,6 @@ class IvfPqIndex:
     # ---- bookkeeping -------------------------------------------------
     def indexed_version(self) -> int:
         return self.codes.manifest().get("txns", {}).get(_IVFPQ_APP, 0)
-
-    def _dim(self, df: DataFrame) -> int:
-        return df.select(F.size(self.vec_col).alias("d")).first()["d"]
-
-    def centroid_frame(self) -> DataFrame:
-        return self.centroids.read().select(
-            F.col("cell_id").alias(self.id_col),
-            F.col("centroid").alias(self.vec_col),
-        )
-
-    def _scorer_state(self) -> dict:
-        """The stored centroid structures the assignment scorer reads —
-        flat: the centroid frame; ivf2: + coarse centroids and the
-        fine→coarse map (mirrors :meth:`AnnIndex._scorer_state`)."""
-        st = {"cents": self.centroid_frame()}
-        if self.scorer == "ivf2":
-            st["coarse"] = self.coarse.read().select(
-                "coarse_id", F.col("centroid").alias(self.vec_col)
-            )
-            fine = self.centroids.read().select(
-                F.col("cell_id").alias("fine_id"),
-                F.col("centroid").alias(self.vec_col),
-            )
-            f2c = self.centroids.read().select(
-                F.col("cell_id").alias("fine_id"), "coarse_id"
-            )
-            st["fine_vecs"] = ivf2_fine_vecs(fine, f2c, self.vec_col)
-        return st
 
     def _rows(self, vecs: DataFrame, st: dict, books: DataFrame,
               v: int) -> DataFrame:
@@ -1086,7 +1067,7 @@ class IvfPqIndex:
         codes = self.codes.read_pruned_eq("cell_id", probed_ids).select(
             self.id_col, "cell_id", "sub", "code"
         )
-        dim = self._dim(queries)
+        dim = _vec_dim(queries, self.vec_col)
         width = dim // self.m
         # ADC table: the query batch's per-(subspace, code) dot products
         qflat = (
@@ -1151,7 +1132,7 @@ class IvfPqIndex:
         v = self.indexed_version()
         probed = self._probe_plan(queries, nprobe, query_id)
         codes = self.codes.read().select(self.id_col, "cell_id", "sub", "code")
-        dim = self._dim(queries)
+        dim = _vec_dim(queries, self.vec_col)
         width = dim // self.m
         qflat = (
             probed.select(query_id, "__qunit").distinct()

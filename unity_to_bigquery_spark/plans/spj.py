@@ -17,7 +17,7 @@ bucket-join regime's contract — you chose ``n`` so a single bucket's
 smaller side fits an executor.
 
 Where Spark's own machinery fits: native Spark bucketed TABLES get this
-from Catalyst for free (plans/bucketing.py); Iceberg gets it from DSv2
+from Catalyst for free (``bucketBy`` + ``saveAsTable``); Iceberg gets it from DSv2
 ``reportPartitioning``. The Python Data Source API has no partitioning
 report, so for OUR table format the co-partition plan is built here
 from the manifest — same information, same result, and it composes

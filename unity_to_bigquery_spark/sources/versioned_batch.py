@@ -46,9 +46,11 @@ Scale/design notes:
   never a correctness source. Bloom pruning is deliberately excluded
   here: bit positions depend on the WRITER's (bloom_bits, hashes)
   config, which a detached reader cannot know.
-- ``read()`` executes executor-side via pyarrow and crosses rows into
-  Python (the Python Data Source API's contract — same trade as the
-  streaming source). The SQL front door for BULK scans is
+- ``read()`` executes executor-side in pyarrow and yields Arrow
+  RecordBatches under the declared schema (the one executor path,
+  shared with the streaming source via ``data_columns``; a declared
+  type with no Arrow equivalent fails reader construction with a
+  ValueError naming the column). The SQL front door for BULK scans is
   ``VersionedTable.to_view``/``sql()``, which registers the
   programmatic read (native JVM parquet scan); this relation is the
   portability surface (``spark.read.format``, cross-language SQL,
@@ -69,38 +71,15 @@ from unity_to_bigquery_spark.sources.versioned_stream import (
     _PackedPartition,
     _opt_version_pin,
     _phys_fields,
+    arrow_schema,
+    data_columns,
     detached_table,
+    initial_fills,
     pack_budget_rows,
     pack_partitions,
     pos_ordinals,
-    warn_arrow_fallback,
+    struct_specs,
 )
-
-
-def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
-    """Top-level ``(name, type_str)`` pairs of a struct simpleString —
-    parsed without a SparkSession (depth-0 colon/comma split)."""
-    inner = ddl.strip()
-    if inner.startswith("struct<") and inner.endswith(">"):
-        inner = inner[len("struct<"):-1]
-    out, depth, tok = [], 0, []
-    for ch in inner:
-        if ch == "<":
-            depth += 1
-        elif ch == ">":
-            depth -= 1
-        elif ch == "," and depth == 0:
-            out.append("".join(tok))
-            tok = []
-            continue
-        tok.append(ch)
-    if tok:
-        out.append("".join(tok))
-    return [
-        tuple(s.strip() for s in t.split(":", 1))
-        for t in out
-        if t.strip()
-    ]
 
 
 class _SnapshotFilePartition(InputPartition):
@@ -110,10 +89,9 @@ class _SnapshotFilePartition(InputPartition):
     ``anti``: (keyfile_abspath, keyfile_col, phys_row_col) equality-
     delete triples — rows matching ANY are dead (same shape as the
     streaming CDC partitions). ``pos_anti``: (pairfile_abspath, rel)
-    positional-delete pairs. ``struct_specs``: {field_idx: [phys member
-    names in logical member order]} for field-ID struct rebuilds.
-    ``fills``: {field_idx: value} initial defaults applying to THIS
-    file (decided at plan time from file_versions)."""
+    positional-delete pairs. ``struct_specs`` / ``fills``: as in
+    ``versioned_stream.data_columns`` (fills decided at plan time from
+    file_versions)."""
 
     def __init__(self, path, fields, anti, pos_anti, struct_specs, fills):
         self.path = path
@@ -128,11 +106,13 @@ class VersionedTableBatchReader(DataSourceReader):
     """Snapshot/time-travel batch reader (one InputPartition per live
     file). Never defines ``pushFilters`` — see module docstring."""
 
-    def __init__(self, options, schema=None):
+    def __init__(self, options, schema):
         import os
 
         from unity_to_bigquery_spark.plans.versioned import DATA_DIR
 
+        # read() yields RecordBatches under the declared schema
+        self._pa_schema = arrow_schema(schema)
         self.root = options["path"]
         self._t = detached_table(self.root, options.get("branch"))
         pin = _opt_version_pin(options, self._t)
@@ -146,18 +126,6 @@ class VersionedTableBatchReader(DataSourceReader):
         # multi-file InputPartitions (round 14, VERDICT r13 #2): rows
         # per planned partition; 0 = one partition per live file
         self._pack_rows = pack_budget_rows(options)
-        # Arrow fast path (guide §4.2): the declared StructType, when
-        # Spark hands it over, converts (pure-Python) to the arrow
-        # schema the JVM expects, letting read() yield RecordBatches
-        # instead of per-row tuples. None → row path.
-        self._pa_schema = None
-        if schema is not None:
-            try:
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                self._pa_schema = to_arrow_schema(schema)
-            except Exception:  # noqa: BLE001 — unconvertible type
-                self._pa_schema = None
 
     # -- plan ----------------------------------------------------------
     def partitions(self):
@@ -168,21 +136,8 @@ class VersionedTableBatchReader(DataSourceReader):
         phys_of = {
             e["name"]: e["phys"] for e in (m.get("column_mapping") or [])
         }
-        nested_cm = {
-            e["name"]: {n["name"]: n["phys"] for n in e["fields"]}
-            for e in (m.get("column_mapping") or [])
-            if e.get("fields")
-        }
         fields = _phys_fields(m)
-        logical = _ddl_fields(m["schema"])
-        # struct rebuild specs: phys member names in LOGICAL member order
-        struct_specs: dict[int, list[str]] = {}
-        for i, (name, tstr) in enumerate(logical):
-            if tstr.startswith("struct<"):
-                mem = [n for n, _t in _ddl_fields(tstr)]
-                sub = nested_cm.get(name, {})
-                struct_specs[i] = [sub.get(n, n) for n in mem]
-        defaults = m.get("column_defaults") or {}
+        specs = struct_specs(m)
         fvm = m.get("file_versions", {})
         pos_of = lambda f: [  # noqa: E731
             (abspath(d["file"]), f)
@@ -195,29 +150,10 @@ class VersionedTableBatchReader(DataSourceReader):
                 (abspath(d0), k, phys_of.get(k, k))
                 for d0, k, _v in self._t._cdc_applicable(m, f)
             ]
-            fills = {}
-            for i, (name, _tstr) in enumerate(logical):
-                dinfo = defaults.get(name)
-                if dinfo is None or fvm.get(f, 0) >= int(dinfo["version"]):
-                    continue
-                if "value" not in dinfo:
-                    raise ValueError(
-                        f"column {name!r} has an initial default whose "
-                        "value predates batch-relation support — read "
-                        "this table via the programmatic "
-                        "VersionedTable.read() API"
-                    )
-                v = dinfo["value"]
-                if i in struct_specs and isinstance(v, dict):
-                    # the stored value keys by DECLARE-time member names
-                    # == physical names (fresh columns mint phys ==
-                    # logical; renames never change phys) — so convert
-                    # through the physical spec, rename-proof
-                    v = tuple(v.get(pm) for pm in struct_specs[i])
-                fills[i] = v
             parts.append(
                 _SnapshotFilePartition(
-                    abspath(f), fields, anti, pos_of(f), struct_specs, fills
+                    abspath(f), fields, anti, pos_of(f), specs,
+                    initial_fills(m, fvm.get(f, 0)),
                 )
             )
         if not parts:
@@ -235,39 +171,29 @@ class VersionedTableBatchReader(DataSourceReader):
         )
 
     # -- execute -------------------------------------------------------
-    def _read_arrow(self, partition):
-        """Vectorized executor (guide §4.2): dead-ordinal take + eq-
-        delete anti-filter + column assembly in pyarrow, returning one
-        fully-materialized Table cast to the declared arrow schema (so
-        any unsupported shape raises BEFORE a batch is yielded and the
-        caller can fall back to the row loop). Struct rebuilds and
-        struct defaults stay on the row path — their dict→tuple
-        semantics don't map to a plain cast."""
+    def _read_spec(self, partition):
+        """One per-file spec as ONE Arrow table under the declared
+        schema: dead-ordinal drop + eq-delete anti-filter in pyarrow,
+        then ``data_columns``."""
+        import numpy as np
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        if partition.struct_specs:
-            raise ValueError("struct rebuild: row path")
         tbl = pq.read_table(partition.path)
         if partition.pos_anti:
             dead = pos_ordinals(partition.pos_anti)
             if dead:
                 # vectorized dead-ordinal drop (VERDICT r13 #8): a
                 # boolean mask, no O(rows) Python list
-                import numpy as np
-
                 mask = np.ones(tbl.num_rows, dtype=bool)
                 idx = np.fromiter(dead, dtype=np.int64, count=len(dead))
                 mask[idx[idx < tbl.num_rows]] = False
                 tbl = tbl.filter(pa.array(mask))
         for p, k, rk in partition.anti:
             if rk not in tbl.column_names:
-                # ADVICE r13: an eq-delete keyed on a column added
-                # after this file was written reads NULL here — NULL
-                # never matches (mirrors the stream path); without
-                # this the KeyError demoted the partition to the row
-                # loop exactly on evolved tables
+                # an eq-delete keyed on a column added after this file
+                # was written reads NULL here — NULL never matches
                 continue
             keys = pq.read_table(p, columns=[k]).column(0)
             keys = keys.combine_chunks().drop_null()
@@ -276,100 +202,24 @@ class VersionedTableBatchReader(DataSourceReader):
                 keys = keys.cast(col.type)
             # NULL row values never match (SQL join-on-key semantics):
             # the key set is null-free, so is_in(null) is false/null —
-            # fill_null(False) keeps those rows, same as the row loop
+            # fill_null(False) keeps those rows
             hit = pc.fill_null(pc.is_in(col, value_set=keys), False)
             tbl = tbl.filter(pc.invert(hit))
-        n = tbl.num_rows
-        target = self._pa_schema
-        cols = []
-        for i, pf in enumerate(partition.fields):
-            ftype = target.field(i).type
-            if i in partition.fills:
-                v = partition.fills[i]
-                if isinstance(v, (tuple, dict)):
-                    raise ValueError("struct default: row path")
-                cols.append(
-                    pa.nulls(n, ftype)
-                    if v is None
-                    else pc.cast(pa.array([v] * n), ftype)
-                )
-            elif pf not in tbl.column_names:
-                cols.append(pa.nulls(n, ftype))  # additive evolution
-            else:
-                cols.append(tbl.column(pf).cast(ftype))
-        return pa.table(cols, schema=target)
+        return pa.table(
+            data_columns(tbl, partition, self._pa_schema),
+            schema=self._pa_schema,
+        )
 
     def read(self, partition):
-        # Packed partitions (round 14) loop their per-file specs; the
-        # arrow path materializes EVERY spec's table before yielding
-        # the first batch so a late fallback can never mix
-        # RecordBatches with row tuples in one partition's output.
-        import pyarrow as pa
-
+        # Packed partitions (round 14) loop their per-file specs
         specs = (
             partition.items
             if isinstance(partition, _PackedPartition)
             else [partition]
         )
-        specs = [s for s in specs if s.path is not None]
-        if not specs:
-            return
-        if self._pa_schema is not None:
-            try:
-                tables = [self._read_arrow(s) for s in specs]
-            except (  # narrowed (ADVICE r13): environment errors
-                ValueError,  # (missing file, permissions) re-raise
-                KeyError,    # instead of paying a doubled read
-                TypeError,
-                NotImplementedError,
-                pa.ArrowException,
-            ) as exc:
-                warn_arrow_fallback(exc)
-                tables = None
-            if tables is not None:
-                for t in tables:
-                    yield from t.to_batches()
-                return
         for s in specs:
-            yield from self._read_rows(s)
-
-    def _read_rows(self, partition):
-        """Row-at-a-time executor for ONE per-file spec — the fallback
-        for shapes the arrow path refuses (struct rebuilds / struct
-        defaults)."""
-        import pyarrow.parquet as pq
-
-        anti = [
-            (set(pq.read_table(p, columns=[k]).column(0).to_pylist()), rk)
-            for p, k, rk in partition.anti
-        ]
-        dead = pos_ordinals(partition.pos_anti)
-        table = pq.read_table(partition.path)
-        fields = partition.fields
-        specs = partition.struct_specs
-        fills = partition.fills
-        for idx, row in enumerate(table.to_pylist()):
-            if idx in dead:
-                continue
-            hit = False
-            for s, rk in anti:
-                v = row.get(rk)
-                # None NEVER matches (SQL join-on-key semantics)
-                if v is not None and v in s:
-                    hit = True
-                    break
-            if hit:
-                continue
-            out = []
-            for i, pf in enumerate(fields):
-                if i in fills:
-                    out.append(fills[i])
-                    continue
-                v = row.get(pf)
-                if i in specs and isinstance(v, dict):
-                    v = tuple(v.get(pm) for pm in specs[i])
-                out.append(v)
-            yield tuple(out)
+            if s.path is not None:  # empty-snapshot sentinel
+                yield from self._read_spec(s).to_batches()
 
 
 class PushdownSnapshotReader(VersionedTableBatchReader):
@@ -427,7 +277,7 @@ class VersionedTableCDFReader(DataSourceReader):
     executor path — batch CDF and streamed CDC cannot diverge because
     they are the same code."""
 
-    def __init__(self, options, schema=None):
+    def __init__(self, options, schema):
         root = options["path"]
         so = {"path": root, "emit_change_types": "true"}
         if options.get("branch"):
@@ -460,7 +310,7 @@ class VersionedTableCDFReader(DataSourceReader):
         return self._sr.read(partition)
 
 
-def make_batch_reader(options, schema=None):
+def make_batch_reader(options, schema):
     if str(
         options.get("readchangefeed", options.get("readChangeFeed", "false"))
     ).lower() == "true":

@@ -11,9 +11,12 @@ Scale/design notes:
   per-file specs are bin-packed into row-budgeted InputPartitions
   (round 14 — see ``_PackedPartition``), so file reads parallelize
   across executors without paying a Python-worker task per tiny file.
-- ``read()`` executes executor-side via pyarrow. Rows cross the
-  Python→JVM boundary (the Data Source API's contract) — fine for
-  incremental tails, which are delta-sized by definition; a bulk
+- ``read()`` executes executor-side in pyarrow and yields Arrow
+  RecordBatches under the declared schema (``data_columns``: column
+  mapping, struct member renames, initial defaults, additive
+  evolution). Batches cross the Python→JVM boundary (the Data Source
+  API's contract) — fine for incremental tails, which are delta-sized
+  by definition; a bulk
   backfill should use the batch ``changes()``/``read()`` path, which
   scans parquet natively in the JVM.
 - Append-only contract, like Delta's streaming source without
@@ -156,26 +159,30 @@ class VersionedTableDataSource(DataSource):
         return make_batch_reader(self.options, schema)
 
 
-def _ddl_field_names(ddl: str) -> list[str]:
-    """Top-level field names of a ``struct<a:bigint,b:array<int>>``
-    simpleString — parsed without a SparkSession (depth-0 comma split)."""
+def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
+    """Top-level ``(name, type_str)`` pairs of a struct simpleString —
+    parsed without a SparkSession (depth-0 colon/comma split)."""
     inner = ddl.strip()
     if inner.startswith("struct<") and inner.endswith(">"):
         inner = inner[len("struct<"):-1]
-    names, depth, tok = [], 0, []
+    out, depth, tok = [], 0, []
     for ch in inner:
         if ch == "<":
             depth += 1
         elif ch == ">":
             depth -= 1
         elif ch == "," and depth == 0:
-            names.append("".join(tok))
+            out.append("".join(tok))
             tok = []
             continue
         tok.append(ch)
     if tok:
-        names.append("".join(tok))
-    return [t.split(":", 1)[0].strip() for t in names if t.strip()]
+        out.append("".join(tok))
+    return [
+        tuple(s.strip() for s in t.split(":", 1))
+        for t in out
+        if t.strip()
+    ]
 
 
 def _phys_fields(m: dict) -> list[str]:
@@ -184,9 +191,129 @@ def _phys_fields(m: dict) -> list[str]:
     immutable per field, so the end manifest's mapping is correct for
     every file in the window regardless of renames inside it; the
     output schema stays logical by position."""
-    names = _ddl_field_names(m["schema"])
     phys = {e["name"]: e["phys"] for e in (m.get("column_mapping") or [])}
-    return [phys.get(n, n) for n in names]
+    return [phys.get(n, n) for n, _t in _ddl_fields(m["schema"])]
+
+
+def struct_specs(m: dict) -> dict[int, list[str]]:
+    """``{field_idx: [physical member names in logical member order]}``
+    for every top-level struct column of ``m``'s schema — the nested
+    field-ID mapping (round 12): a renamed member is read under its
+    immutable physical name and emitted under its logical one."""
+    nested = {
+        e["name"]: {n["name"]: n["phys"] for n in e["fields"]}
+        for e in (m.get("column_mapping") or [])
+        if e.get("fields")
+    }
+    out: dict[int, list[str]] = {}
+    for i, (name, tstr) in enumerate(_ddl_fields(m["schema"])):
+        if tstr.startswith("struct<"):
+            sub = nested.get(name, {})
+            out[i] = [sub.get(n, n) for n, _t in _ddl_fields(tstr)]
+    return out
+
+
+def initial_fills(m: dict, file_version: int, as_of: int | None = None) -> dict:
+    """``{field_idx: value}`` initial defaults (round 12) of ``m``'s
+    schema that apply to a file added at ``file_version``: the column
+    was declared with a default AFTER the file was written and, when
+    ``as_of`` is given, at or before that version (the change feed
+    reads each commit's rows as of that commit). The manifest stores
+    the value evaluated at declare time; struct values key by the
+    declare-time member names, which are the physical names."""
+    defaults = m.get("column_defaults") or {}
+    if not defaults:
+        return {}
+    fills = {}
+    for i, (name, _t) in enumerate(_ddl_fields(m["schema"])):
+        dinfo = defaults.get(name)
+        if dinfo is None:
+            continue
+        dver = int(dinfo["version"])
+        if file_version >= dver or (as_of is not None and dver > as_of):
+            continue
+        if "value" not in dinfo:
+            raise ValueError(
+                f"column {name!r} has an initial default whose value "
+                "predates versioned_table reader support — read this "
+                "table via the programmatic VersionedTable.read() API"
+            )
+        fills[i] = dinfo["value"]
+    return fills
+
+
+def arrow_schema(schema):
+    """The declared StructType as the Arrow schema ``read()`` yields.
+    A type with no Arrow equivalent fails the reader's construction
+    with a ValueError naming the column."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    try:
+        return to_arrow_schema(schema)
+    except TypeError as exc:  # PySparkTypeError: unsupported type
+        for f in schema.fields:
+            try:
+                to_arrow_schema(StructType([f]))
+            except TypeError:
+                raise ValueError(
+                    f"versioned_table: column {f.name!r} of type "
+                    f"{f.dataType.simpleString()} has no Arrow equivalent"
+                ) from exc
+        raise
+
+
+def _rebuild_struct(arr, members: list[str], ftype):
+    """A file's struct column under its logical member names and types:
+    each member is the physical child of that name cast to its target
+    type (NULL when the file predates the member), reassembled with
+    the parent's null mask."""
+    import pyarrow as pa
+
+    kids = arr.flatten()
+    pos = {arr.type.field(j).name: j for j in range(arr.type.num_fields)}
+    fields = [ftype.field(j) for j in range(ftype.num_fields)]
+    children = [
+        kids[pos[pm]].cast(fld.type)
+        if pm in pos
+        else pa.nulls(len(arr), fld.type)
+        for pm, fld in zip(members, fields)
+    ]
+    return pa.StructArray.from_arrays(
+        children, fields=fields, mask=arr.is_null()
+    )
+
+
+def data_columns(tbl, spec, target) -> list:
+    """The Arrow columns of one per-file spec's table fields, typed as
+    the leading fields of ``target``: initial-default constants,
+    NULL columns for fields the file predates (additive evolution),
+    struct columns rebuilt through the nested field-ID mapping, and
+    plain casts for the rest."""
+    import pyarrow as pa
+
+    n = tbl.num_rows
+    cols = []
+    for i, pf in enumerate(spec.fields):
+        ftype = target.field(i).type
+        members = spec.struct_specs.get(i)
+        if i in spec.fills:
+            v = spec.fills[i]
+            if members is not None and isinstance(v, dict):
+                v = {
+                    ftype.field(j).name: v.get(pm)
+                    for j, pm in enumerate(members)
+                }
+            cols.append(pa.repeat(pa.scalar(v, type=ftype), n))
+        elif pf not in tbl.column_names:
+            cols.append(pa.nulls(n, ftype))
+        elif members is not None:
+            cols.append(
+                _rebuild_struct(tbl.column(pf).combine_chunks(), members, ftype)
+            )
+        else:
+            cols.append(tbl.column(pf).cast(ftype))
+    return cols
 
 
 def pos_ordinals(pairs) -> set[int]:
@@ -223,9 +350,15 @@ def pos_ordinals(pairs) -> set[int]:
 
 
 class _FilePartition(InputPartition):
-    def __init__(self, path: str, fields: list[str], row_base=None):
+    """One added data file of an append-only micro-batch. ``fields``,
+    ``struct_specs`` and ``fills`` as in ``data_columns``."""
+
+    def __init__(self, path: str, fields: list[str], struct_specs: dict,
+                 fills: dict, row_base=None):
         self.path = path
         self.fields = fields
+        self.struct_specs = struct_specs
+        self.fills = fills
         # row lineage: ids are row_base + ordinal; None when ids are
         # not requested; "phys" when the file materialized __row_id
         self.row_base = row_base
@@ -260,19 +393,11 @@ _PACK_UNKNOWN_ROWS = 1 << 17
 
 
 def pack_budget_rows(options) -> int:
-    """Rows per planned InputPartition: reader option ``pack_rows``
-    wins, else ``$SPARK_GRAFT_DSV2_ROWS_PER_PART`` (the cluster-tuning
-    hook), else the 1M default. ``0`` disables packing (one partition
-    per file — the pre-r14 layout, kept for tests that assert per-file
+    """Rows per planned InputPartition: reader option ``pack_rows``,
+    else the 1M default. ``0`` disables packing (one partition per
+    file — the pre-r14 layout, kept for tests that assert per-file
     pruning)."""
-    import os
-
-    v = options.get("pack_rows")
-    if v is None:
-        v = os.environ.get(
-            "SPARK_GRAFT_DSV2_ROWS_PER_PART", _PACK_DEFAULT_ROWS
-        )
-    return int(v)
+    return int(options.get("pack_rows", _PACK_DEFAULT_ROWS))
 
 
 def pack_partitions(parts: list, budget: int, rows_of) -> list:
@@ -297,25 +422,6 @@ def pack_partitions(parts: list, budget: int, rows_of) -> list:
     return [b[0] if len(b) == 1 else _PackedPartition(b) for b in bins]
 
 
-_ARROW_FALLBACK_WARNED = False
-
-
-def warn_arrow_fallback(exc: Exception) -> None:
-    """ADVICE r13: a silent arrow→row-loop demotion must be observable.
-    One warning per Python worker process, on executor stderr (where
-    UDF prints land — guide §4.6)."""
-    global _ARROW_FALLBACK_WARNED
-    if not _ARROW_FALLBACK_WARNED:
-        _ARROW_FALLBACK_WARNED = True
-        import sys
-
-        print(
-            "versioned_table: arrow fast path fell back to the row loop: "
-            f"{exc!r}",
-            file=sys.stderr,
-        )
-
-
 class _CDCFilePartition(InputPartition):
     """One data file's contribution to one commit's change rows.
 
@@ -332,12 +438,15 @@ class _CDCFilePartition(InputPartition):
     (pairfile_path, target_rel) pairs emit — the rows a
     ``delete_positions`` commit killed, delivered as 'delete'
     retractions (the batch twin is ``_cdc_commit_frames``' pos block).
+    ``struct_specs`` / ``fills``: as in ``data_columns``.
     """
 
     def __init__(self, path, fields, change, version, anti, match_any,
-                 pos_anti=(), pos_match=(), row_base=None):
+                 pos_anti, pos_match, row_base, struct_specs, fills):
         self.path = path
         self.fields = fields
+        self.struct_specs = struct_specs
+        self.fills = fills
         self.change = change
         self.version = version
         self.anti = anti
@@ -348,20 +457,12 @@ class _CDCFilePartition(InputPartition):
 
 
 class VersionedTableStreamReader(DataSourceStreamReader):
-    def __init__(self, options, schema=None):
+    def __init__(self, options, schema):
         self.root = options["path"]
-        # Arrow fast path (guide §4.2): when Spark hands the parsed
-        # StructType over, read() yields RecordBatches assembled in
-        # pyarrow instead of per-row tuples (a generator of batches IS
-        # an iterator — the partition-reader contract, rule 14e, holds)
-        self._pa_schema = None
-        if schema is not None:
-            try:
-                from pyspark.sql.pandas.types import to_arrow_schema
-
-                self._pa_schema = to_arrow_schema(schema)
-            except Exception:  # noqa: BLE001 — unconvertible type
-                self._pa_schema = None
+        # read() yields RecordBatches assembled in pyarrow under the
+        # declared schema (a generator of batches IS an iterator — the
+        # partition-reader contract, rule 14e, holds)
+        self._pa_schema = arrow_schema(schema)
         # Delta's skipChangeCommits analogue: deliver added files and
         # IGNORE delete commits in range (consumer accepts that rows
         # retracted after delivery are not re-retracted) instead of
@@ -404,9 +505,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # AvailableNow captures one target up front, so max_versions
         # pacing is steady-state only (see latestOffset).
         self.start_version = int(options.get("starting_version", "0"))
-        # manifest access without a SparkSession (driver-side JSON IO)
-        from unity_to_bigquery_spark.plans.versioned import VersionedTable
-
         # option "branch": stream a BRANCH's commit line (round 9 — the
         # audit-consumer side of write-audit-publish: validate in-flight
         # branch data with a streaming job BEFORE publish). Offsets stay
@@ -418,27 +516,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # drain after the branch is gone fails with NoSuchVersionError
         # rather than silently reading main.
         self.branch = options.get("branch")
-        if self.branch:
-            parent = VersionedTable.__new__(VersionedTable)
-            parent.root = self.root
-            # driver-side manifest IO only — no session, default config
-            parent.spark = None
-            parent.partition_col = None
-            parent.partition_spec = None
-            parent.distinct_index_cols = ()
-            parent.bloom_index_cols = ()
-            parent.bloom_bits = 8192
-            parent.bloom_hashes = 3
-            bs = parent.branches()
-            if self.branch not in bs:
-                raise ValueError(
-                    f"no branch {self.branch!r} in {self.root} "
-                    f"(existing: {sorted(bs)})"
-                )
-            self._t = parent.branch(self.branch)
-        else:
-            self._t = VersionedTable.__new__(VersionedTable)
-            self._t.root = self.root
+        self._t = detached_table(self.root, self.branch)
         # Validate the bootstrap version eagerly (ADVICE r6): a
         # too-high starting_version would otherwise yield a silently
         # EMPTY stream (latestOffset < initialOffset) — a misconfigured
@@ -525,6 +603,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             for d in (m.get("deletes") or []) + (m.get("pos_deletes") or [])
         }
         fields = _phys_fields(m_end)
+        specs = struct_specs(m_end)
         parts: list[_FilePartition] = []
         m_prev = self._t.manifest(lo)
         for v in range(lo + 1, hi + 1):
@@ -547,9 +626,13 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                     )
                 m_prev = m_v  # skipChangeCommits: drop the whole commit
                 continue
+            # initial defaults follow the END manifest, like the batch
+            # changes() scan of the added files
+            fvm = m_v.get("file_versions", {})
             parts.extend(
                 _FilePartition(
-                    os.path.join(self.root, DATA_DIR, f), fields,
+                    os.path.join(self.root, DATA_DIR, f), fields, specs,
+                    initial_fills(m_end, fvm.get(f, 0)),
                     row_base=self._row_base_of(m_v, f),
                 )
                 for f in m_v["files"]
@@ -606,6 +689,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         from unity_to_bigquery_spark.plans.versioned import DATA_DIR, VersionedTable
 
         fields = _phys_fields(m_end)
+        specs = struct_specs(m_end)
         abspath = lambda f: os.path.join(self.root, DATA_DIR, f)  # noqa: E731
         # (keyfile_path, keyfile_col, row_col): the delete-key FILE
         # stores its column under the logical name at commit (== the
@@ -617,6 +701,26 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         kf = lambda entries: [  # noqa: E731
             (abspath(d[0]), d[1], phys_of.get(d[1], d[1])) for d in entries
         ]
+        # per-file pos-pair application, the streaming mirror of the
+        # batch _scan_pos fix (ADVICE r7): carried pos-delete entries
+        # must anti-filter every per-file scan, not just trip a length
+        # check
+        posf = lambda m, f: [  # noqa: E731
+            (abspath(d["file"]), f)
+            for d in m.get("pos_deletes", [])
+            if f in d["targets"]
+        ]
+
+        def part(m, as_of, f, change, anti, match_any, pos_match=()):
+            # rows of f as the batch twin scans them under manifest m
+            # (== version as_of): its pos deletes, lineage and defaults
+            fv = m.get("file_versions", {}).get(f, 0)
+            return _CDCFilePartition(
+                abspath(f), fields, change, v, anti, match_any,
+                posf(m, f), list(pos_match), self._row_base_of(m, f),
+                specs, initial_fills(m_end, fv, as_of),
+            )
+
         parts: list[_CDCFilePartition] = []
         m_prev = self._t.manifest(lo)
         for v in range(lo + 1, hi + 1):
@@ -624,15 +728,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             if str(m_v.get("op", "")).startswith(VersionedTable._CDC_NOOP_OPS):
                 m_prev = m_v
                 continue
-            # per-file pos-pair application, the streaming mirror of the
-            # batch _scan_pos fix (ADVICE r7): carried pos-delete
-            # entries must anti-filter every per-file scan, not just
-            # trip a length check
-            posf = lambda m, f: [  # noqa: E731
-                (abspath(d["file"]), f)
-                for d in m.get("pos_deletes", [])
-                if f in d["targets"]
-            ]
             prev_files = set(m_prev["files"])
             cur_files = set(m_v["files"])
             app = self._t._cdc_applicable
@@ -642,38 +737,22 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 if b is not None and a == b:
                     continue
                 if b is None:
-                    parts.append(
-                        _CDCFilePartition(abspath(f), fields, "delete", v,
-                                          kf(a), [], posf(m_prev, f),
-                                          row_base=self._row_base_of(m_prev, f))
-                    )
+                    parts.append(part(m_prev, v - 1, f, "delete", kf(a), []))
                     continue
                 new_e = tuple(d for d in b if d not in a)
                 gone_e = tuple(d for d in a if d not in b)
                 if new_e:
                     parts.append(
-                        _CDCFilePartition(
-                            abspath(f), fields, "delete", v, kf(a), kf(new_e),
-                            posf(m_v, f),
-                            row_base=self._row_base_of(m_v, f),
-                        )
+                        part(m_v, v, f, "delete", kf(a), kf(new_e))
                     )
                 if gone_e:
                     parts.append(
-                        _CDCFilePartition(
-                            abspath(f), fields, "insert", v, kf(b), kf(gone_e),
-                            posf(m_v, f),
-                            row_base=self._row_base_of(m_v, f),
-                        )
+                        part(m_v, v, f, "insert", kf(b), kf(gone_e))
                     )
             for f in m_v["files"]:
                 if f not in prev_files:
                     parts.append(
-                        _CDCFilePartition(
-                            abspath(f), fields, "insert", v, kf(app(m_v, f)), [],
-                            posf(m_v, f),
-                            row_base=self._row_base_of(m_v, f),
-                        )
+                        part(m_v, v, f, "insert", kf(app(m_v, f)), [])
                     )
             # delete_positions commits: one 'delete' partition per live
             # target file, emitting ONLY the newly-killed ordinals
@@ -688,14 +767,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                  if t in prev_files and t in cur_files}
             ):
                 parts.append(
-                    _CDCFilePartition(
-                        abspath(f), fields, "delete", v,
-                        kf(app(m_prev, f)), [], posf(m_prev, f),
+                    part(
+                        m_prev, v - 1, f, "delete", kf(app(m_prev, f)), [],
                         pos_match=[
                             (abspath(d["file"]), f)
                             for d in new_pos if f in d["targets"]
                         ],
-                        row_base=self._row_base_of(m_prev, f),
                     )
                 )
             # DROPPED pos-delete entries with surviving targets (a
@@ -718,28 +795,23 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 b = app(m_v, f)
                 gone_eq = tuple(d for d in a if d not in b)
                 parts.append(
-                    _CDCFilePartition(
-                        abspath(f), fields, "insert", v,
-                        kf(b) + kf(gone_eq), [], posf(m_v, f),
+                    part(
+                        m_v, v, f, "insert", kf(b) + kf(gone_eq), [],
                         pos_match=[
                             (abspath(d["file"]), f)
                             for d in gone_pos if f in d["targets"]
                         ],
-                        row_base=self._row_base_of(m_v, f),
                     )
                 )
             m_prev = m_v
         return parts
 
-    def _read_arrow(self, partition):
-        """Vectorized executor (guide §4.2): ordinal take + is_in eq
-        filters + column assembly in pyarrow, returning ONE fully-
-        materialized Table cast to the declared arrow schema — any
-        unsupported shape raises BEFORE a batch is yielded so read()
-        can fall back to the row loop. Semantics mirror the row path
-        exactly: positional filters key on ORIGINAL file ordinals
-        (tracked through every filter), NULL key values never match,
-        columns missing from old files NULL-fill, int row_base ids are
+    def _read_spec(self, partition):
+        """One per-file spec as ONE Arrow table under the declared
+        schema: ordinal take + is_in eq filters in pyarrow, then
+        ``data_columns`` and the lineage / change columns. Positional
+        filters key on ORIGINAL file ordinals (tracked through every
+        filter), NULL key values never match, int row_base ids are
         base + original ordinal."""
         import numpy as np
         import pyarrow as pa
@@ -815,14 +887,8 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                     ords = pc.filter(ords, mm)
 
         nn = tbl.num_rows
-        cols, i = [], 0
-        for pf in partition.fields:
-            ftype = target.field(i).type
-            if pf in tbl.column_names:
-                cols.append(tbl.column(pf).cast(ftype))
-            else:
-                cols.append(pa.nulls(nn, ftype))  # additive evolution
-            i += 1
+        cols = data_columns(tbl, partition, target)
+        i = len(cols)
         rb = partition.row_base
         if rb is not None:
             ftype = target.field(i).type
@@ -839,123 +905,25 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             i += 1
         if is_cdc:
             cols.append(
-                pc.cast(pa.array([partition.change] * nn), target.field(i).type)
+                pa.repeat(pa.scalar(partition.change, target.field(i).type), nn)
             )
-            i += 1
             cols.append(
-                pc.cast(
-                    pa.array([partition.version] * nn), target.field(i).type
+                pa.repeat(
+                    pa.scalar(partition.version, target.field(i + 1).type), nn
                 )
             )
-            i += 1
-        if i != len(target.names):
-            raise ValueError("schema arity mismatch: row path")
         return pa.table(cols, schema=target)
 
     def read(self, partition):
         # executor-side parquet read; column order pinned to the
-        # schema. Packed partitions (round 14) loop their per-file
-        # specs; the arrow path materializes EVERY spec's table before
-        # yielding the first batch so a late fallback can never mix
-        # RecordBatches with row tuples in one partition's output.
-        import pyarrow as pa
-
+        # schema. Packed partitions (round 14) loop their per-file specs.
         specs = (
             partition.items
             if isinstance(partition, _PackedPartition)
             else [partition]
         )
-        if self._pa_schema is not None:
-            try:
-                tables = [self._read_arrow(s) for s in specs]
-            except (  # narrowed (ADVICE r13): environment errors
-                ValueError,  # (missing file, permissions) re-raise
-                KeyError,    # instead of paying a doubled read
-                TypeError,
-                NotImplementedError,
-                pa.ArrowException,
-            ) as exc:
-                warn_arrow_fallback(exc)
-                tables = None
-            if tables is not None:
-                for t in tables:
-                    yield from t.to_batches()
-                return
         for s in specs:
-            yield from self._read_rows(s)
-
-    def _read_rows(self, partition):
-        """Row-at-a-time executor for ONE per-file spec — the fallback
-        for shapes the arrow path refuses (struct rebuilds) and the
-        bit-equality reference the arrow tests compare against."""
-        import pyarrow.parquet as pq
-
-        if isinstance(partition, _CDCFilePartition):
-            anti = [
-                (set(pq.read_table(p, columns=[k]).column(0).to_pylist()), rk)
-                for p, k, rk in partition.anti
-            ]
-            match = [
-                (set(pq.read_table(p, columns=[k]).column(0).to_pylist()), rk)
-                for p, k, rk in partition.match_any
-            ]
-            dead_pos = pos_ordinals(partition.pos_anti)
-            match_pos = pos_ordinals(partition.pos_match) if partition.pos_match else None
-            table = pq.read_table(partition.path)
-            tail = (partition.change, partition.version)
-
-            # row.get (not row[k]): files predating an additive schema
-            # evolution lack the key column — NULL-fill like the batch
-            # _scan. None NEVER matches (SQL join-on-key semantics: the
-            # batch changes_with_type's anti/semi joins never match NULL;
-            # Python's `None in {None}` is True and would diverge).
-            def _hits(row, pairs):
-                for s, k in pairs:
-                    v = row.get(k)
-                    if v is not None and v in s:
-                        return True
-                return False
-
-            rb = partition.row_base
-
-            def _rid(idx, row, rb=rb):
-                if rb == "phys":
-                    return row.get("__row_id")
-                if isinstance(rb, int):
-                    return rb + idx
-                return None  # "null": pre-lineage file
-
-            for idx, row in enumerate(table.to_pylist()):
-                # row ordinal within the file == _metadata.row_index:
-                # pyarrow reads preserve file order (batch-twin contract)
-                if idx in dead_pos:
-                    continue
-                if match_pos is not None and idx not in match_pos:
-                    continue
-                if _hits(row, anti):
-                    continue
-                if match and not _hits(row, match):
-                    continue
-                base_t = tuple(row.get(f) for f in partition.fields)
-                if rb is not None:
-                    base_t = base_t + (_rid(idx, row),)
-                yield base_t + tail
-            return
-
-        table = pq.read_table(partition.path)
-        rb = partition.row_base
-        for idx, row in enumerate(table.to_pylist()):
-            # .get: files written before an additive schema evolution
-            # lack the new columns — NULL-fill like the batch _scan
-            base_t = tuple(row.get(f) for f in partition.fields)
-            if rb is not None:
-                if rb == "phys":
-                    base_t = base_t + (row.get("__row_id"),)
-                elif isinstance(rb, int):
-                    base_t = base_t + (rb + idx,)
-                else:
-                    base_t = base_t + (None,)
-            yield base_t
+            yield from self._read_spec(s).to_batches()
 
     def commit(self, end: dict) -> None:
         # the streaming checkpoint owns durability; remembering the
