@@ -80,9 +80,9 @@ def test_refresh_idempotent_and_contracts(spark, tmp_path):
     retracted vectors."""
     src = VersionedTable(spark, str(tmp_path / "source"))
     idx = AnnIndex(spark, str(tmp_path / "index"), src, ncells=4)
-    with pytest.raises(ValueError, match="empty"):
+    with pytest.raises(ValueError, match="AnnIndex.build: source table is empty"):
         idx.build()
-    with pytest.raises(ValueError, match="build"):
+    with pytest.raises(ValueError, match="AnnIndex.refresh: build"):
         idx.refresh()
     vecs = spark.createDataFrame(
         [(i, [float(i % 7), float(i % 3), 1.0]) for i in range(40)],
@@ -108,6 +108,12 @@ def test_refresh_idempotent_and_contracts(spark, tmp_path):
     n_commits = idx.assignments.latest_version()
     assert idx.refresh() == 2
     assert idx.assignments.latest_version() == n_commits
+    # a replayed stream boundary at or below the bookmark is a no-op
+    assert idx.refresh(to_version=1) == 2
+    assert idx.refresh(to_version=2) == 2
+    assert idx.assignments.latest_version() == n_commits
+    with pytest.raises(ValueError, match="max_commits must be >= 1"):
+        idx.refresh(max_commits=0)
     # rebuild lands on the same content
     idx.build()
     assert idx.indexed_version() == 2

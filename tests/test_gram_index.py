@@ -29,17 +29,18 @@ def test_incremental_report_equals_batch_and_appends_only(spark, sf_dir, tmp_pat
     docs = load_table(spark, sf_dir, "documents")
     src = VersionedTable(spark, str(tmp_path / "docs"))
     src.commit_append(docs.filter(F.col("doc_id") % 10 != 0))
-    # auto_compact off: this test pins the WRITE PATH shape (appends
-    # only); the compaction policy has its own 20-refresh test
-    gi = GramIndex(spark, str(tmp_path / "gi"), src, auto_compact=False)
+    gi = GramIndex(spark, str(tmp_path / "gi"), src)
     gi.build()
+    built = gi.state.latest_version()
     files_after_build = set(gi.state.manifest()["files"])
     # append the held-out 10% as TWO commits to exercise paging
     src.commit_append(docs.filter(F.col("doc_id") % 20 == 0))
     src.commit_append(docs.filter(F.col("doc_id") % 20 == 10))
-    # page the 2-commit backlog one commit at a time
+    # page the 2-commit backlog one commit at a time; this pins the
+    # WRITE PATH shape of the last page's commit (an append), which a
+    # later auto-compaction commit does not change
     gi.refresh(max_commits=1)
-    m = gi.state.manifest()
+    m = gi.state.manifest(built + 2)
     assert m["op"] == "append"
     # build-time files still referenced untouched
     assert files_after_build <= set(m["files"])

@@ -24,7 +24,7 @@ def test_lsh_index_serve_equals_batch_and_contracts(spark, sf_dir, tmp_path):
     src = VersionedTable(spark, str(tmp_path / "docs"))
     src.commit_append(docs.filter(F.col("doc_id") % 10 != 0))
     li = LshIndex(spark, str(tmp_path / "lsh"), src)
-    with pytest.raises(ValueError, match="build"):
+    with pytest.raises(ValueError, match="LshIndex.refresh: build"):
         li.refresh()
     li.build()
     files_after_build = set(li.buckets.manifest()["files"])
@@ -65,8 +65,11 @@ def test_lsh_index_serve_equals_batch_and_contracts(spark, sf_dir, tmp_path):
     src.commit_delete_where(
         src.read().filter("doc_id < 5").select("doc_id"), "doc_id"
     )
+    before = li.buckets.latest_version()
     li.refresh()
     assert li.indexed_version() == src.latest_version()
+    # the delete page is ONE key-scoped replace commit, not an append
+    assert li.buckets.manifest(before + 1)["op"] == "replace_keys"
     assert li.buckets.read().filter("doc_id < 5").count() == 0
     served = sorted(map(tuple, li.dup_pairs().collect()))
     li2 = LshIndex(spark, str(tmp_path / "rebuilt"), src)

@@ -43,6 +43,18 @@ def test_replicated_salt_join_equals_plain(spark, sf_dir):
     assert g1 == g2
 
 
+def _range_exchanges(df) -> int:
+    """Distinct range exchanges in ``df``'s executed (final) plan, not
+    counting reused ones."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    return len(
+        set(re.findall(r"^\W*Exchange rangepartitioning.*plan_id=(\d+)", final, re.M))
+    )
+
+
 def test_global_enumerate_is_exact_total_order(spark, sf_dir):
     """global_enumerate assigns the same positions a global-window
     row_number would — contiguous 1..n in key order — without any
@@ -65,6 +77,9 @@ def test_global_enumerate_is_exact_total_order(spark, sf_dir):
     assert g == w
     n = len(w)
     assert set(g.values()) == set(range(1, n + 1))
+    # counts and positions read ONE range exchange: a second evaluation
+    # samples its own boundaries and the offsets stop matching the rows
+    assert _range_exchanges(got) <= 1
 
 
 def test_approx_percentile_within_accuracy_bound(spark, sf_dir):

@@ -321,3 +321,32 @@ def test_reader_rejects_schema_without_arrow_type(root):
         ValueError, match="column 'span' of type interval year to month"
     ):
         make_batch_reader({"path": root}, schema)
+
+
+def test_readers_reject_files_predating_a_generated_column(spark, root):
+    """A live file written before ``add_generated_column`` holds no value
+    for the column; the DSv2 readers cannot evaluate the expression, so
+    reader construction names the column instead of reading NULL.
+    Rewritten files carry the value and read like ``read()``."""
+    from unity_to_bigquery_spark.sources.versioned_batch import (
+        make_batch_reader,
+    )
+    from unity_to_bigquery_spark.sources.versioned_stream import (
+        VersionedTableStreamReader,
+    )
+
+    t = VersionedTable(spark, root)
+    t.commit_append(spark.createDataFrame([(1, 2), (3, 4)], "a INT, b INT"))
+    g = t.add_generated_column("s", "int", "a + b")
+    schema = t.read().schema
+    with pytest.raises(ValueError, match="generated column 's'"):
+        make_batch_reader({"path": root}, schema)
+    with pytest.raises(ValueError, match="generated column 's'"):
+        VersionedTableStreamReader({"path": root}, schema)
+    # a stream starting at the generated column's commit reads no
+    # earlier file
+    VersionedTableStreamReader({"path": root, "starting_version": str(g)}, schema)
+    t.compact()
+    want = sorted(map(tuple, t.read().collect()))
+    assert want == [(1, 2, 3), (3, 4, 7)]
+    assert sorted(map(tuple, _ds(spark, root).collect())) == want

@@ -95,33 +95,107 @@ from unity_to_bigquery_spark.llm.similarity import (
     pq_encode,
     unit_vectors,
 )
+from unity_to_bigquery_spark.llm.derived_index import DerivedIndex
 from unity_to_bigquery_spark.plans.versioned import VersionedTable
-
-_APP = "ann-index"
-_PQ_APP = "pq-index"
-
-
-def _empty_like(spark: SparkSession, table: VersionedTable) -> DataFrame:
-    """Empty DataFrame with a state table's manifest schema — the
-    replacement-row set of a pure-delete refresh page (the encoders'
-    driver-side dim probes would NPE on an empty input)."""
-    from pyspark.sql.types import StructType
-
-    return spark.createDataFrame(
-        [], StructType.fromDDL(table.manifest()["schema"])
-    )
-
 
 def _vec_dim(df: DataFrame, vec_col: str) -> int:
     """Vector dimension, probed from the first row of ``df``."""
     return df.select(F.size(vec_col).alias("d")).first()["d"]
 
 
-class _CellCentroids:
-    """Centroid-state readers shared by the cell-partitioned indexes
+def _unit(vecs: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, L2-normalized vector) — what the PQ codebooks quantize."""
+    return unit_vectors(vecs, id_col, vec_col).select(
+        id_col, F.col("__unit").alias(vec_col)
+    )
+
+
+def _train_codebooks(idx, snap: DataFrame) -> DataFrame:
+    """Train per-subspace PQ codebooks on the build snapshot (bounded
+    hash-mod sample, driver-side Lloyd) and commit them; returns them."""
+    books = pq_codebooks(
+        _unit(snap, idx.id_col, idx.vec_col), m=idx.m, ksub=idx.ksub,
+        id_col=idx.id_col, vec_col=idx.vec_col, seed=idx.seed,
+    )
+    idx.codebooks.commit_overwrite(books)
+    return books
+
+
+class _CellCentroids(DerivedIndex):
+    """Cell-centroid state shared by the cell-partitioned indexes
     (:class:`AnnIndex`, :class:`IvfPqIndex`): both store fine centroids
     in ``self.centroids`` and, under ``scorer="ivf2"``, coarse ones in
-    ``self.coarse``."""
+    ``self.coarse``. ``scorer="ivf2"`` (round 8, VERDICT r7 #3):
+    assignment and query probing DESCEND a stored two-level structure —
+    √C coarse centroids over the fine centroids — so per-vector scoring
+    is O(C₂ + wprobe·C/C₂) = O(√C) instead of O(C); the fine→coarse map
+    is denormalized into the centroids table and the coarse centroids
+    live in a third (broadcast-sized) VersionedTable."""
+
+    _vector = True
+
+    def __init__(self, spark, root, source, id_col, vec_col, ncells, seed,
+                 scorer, wprobe):
+        if scorer not in ("flat", "ivf2"):
+            raise ValueError(f"scorer must be 'flat' or 'ivf2', got {scorer!r}")
+        self.spark = spark
+        self.source = source
+        self.id_col = id_col
+        self.vec_col = vec_col
+        self.ncells = ncells
+        self.seed = seed
+        self.scorer = scorer
+        self.wprobe = wprobe
+        self.centroids = VersionedTable(spark, os.path.join(root, "centroids"))
+        self.coarse = VersionedTable(spark, os.path.join(root, "coarse"))
+
+    def _train_cells(self, snap: DataFrame) -> None:
+        """Train the cell centroids on the build snapshot — seeded
+        k-means with C = √N cells by default, or under ivf2 the
+        two-level structure — and commit them."""
+        n = snap.count()
+        if self.scorer == "ivf2":
+            fine, coarse, f2c = ivf2_train(
+                snap, ncells=self.ncells, id_col=self.id_col,
+                vec_col=self.vec_col, seed=self.seed, corpus_count=n,
+            )
+            self.centroids.commit_overwrite(
+                fine.join(F.broadcast(f2c), "fine_id").select(
+                    F.col("fine_id").alias("cell_id"),
+                    F.col(self.vec_col).alias("centroid"),
+                    F.col("coarse_id"),
+                )
+            )
+            self.coarse.commit_overwrite(
+                coarse.select(
+                    "coarse_id", F.col(self.vec_col).alias("centroid")
+                )
+            )
+        else:
+            ncells = self.ncells or max(16, int(n**0.5))
+            cents = kmeans_centroids(
+                snap, ncells, id_col=self.id_col, vec_col=self.vec_col,
+                seed=self.seed, corpus_count=n,
+            )
+            self.centroids.commit_overwrite(
+                cents.select(
+                    F.col(self.id_col).alias("cell_id"),
+                    F.col(self.vec_col).alias("centroid"),
+                )
+            )
+
+    def _best_cells(self, vecs: DataFrame, st: dict) -> DataFrame:
+        """(id, cell_id, sim6) under the configured scorer: flat O(C)
+        position-join or the O(√C) two-level descent — the ONLY point
+        where the scorers diverge; storage/refresh/serve are agnostic."""
+        if self.scorer == "flat":
+            return ivf_best_cells(
+                vecs, st["cents"], self.id_col, self.vec_col, nassign=1
+            )
+        return ivf2_descend(
+            vecs, st["coarse"], st["fine_vecs"], self.wprobe, 1,
+            self.id_col, self.vec_col,
+        ).select(self.id_col, "cell_id", "sim6")
 
     def centroid_frame(self) -> DataFrame:
         """Stored centroids in the (id_col, vec_col) shape the
@@ -163,6 +237,8 @@ class AnnIndex(_CellCentroids):
         if idx.should_retrain(): idx.build()
     """
 
+    _app = "ann-index"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -173,41 +249,18 @@ class AnnIndex(_CellCentroids):
         ncells: int | None = None,
         seed: int = 7,
         meta_cols: tuple = (),
-        auto_compact: bool = True,
         scorer: str = "flat",
         wprobe: int = 3,
     ):
-        if scorer not in ("flat", "ivf2"):
-            raise ValueError(f"scorer must be 'flat' or 'ivf2', got {scorer!r}")
-        self.spark = spark
-        self.source = source
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.ncells = ncells
-        self.seed = seed
-        # scorer="ivf2" (round 8, VERDICT r7 #3): assignment and query
-        # probing DESCEND a stored two-level structure — √C coarse
-        # centroids over the fine centroids — so per-vector scoring is
-        # O(C₂ + wprobe·C/C₂) = O(√C) instead of O(C), the 1e9+-vector
-        # regime the module docstring promises. Storage/refresh/serve
-        # protocol is unchanged (scorer-agnostic); the fine→coarse map
-        # is denormalized into the centroids table and the coarse
-        # centroids live in a third (broadcast-sized) VersionedTable.
-        self.scorer = scorer
-        self.wprobe = wprobe
-        # threshold auto-OPTIMIZE after refresh (VERDICT r7 #4):
-        # refreshes accrue ~1 file per touched cell per page and one
-        # merge-on-read delete entry per retraction page — the policy
-        # compacts when either passes its bound, so file counts stay
-        # ∝ cells across arbitrarily many refreshes
-        self.auto_compact = auto_compact
+        super().__init__(
+            spark, root, source, id_col, vec_col, ncells, seed, scorer, wprobe
+        )
         # metadata columns DENORMALIZED into the cell-partitioned
         # assignments at build/refresh time: filtered serving pushes
         # its predicate into the probed-cell scan instead of joining
         # back to the source (at 100 TB the join would re-shuffle the
         # corpus; a stored column is a pushed-down parquet filter)
         self.meta_cols = tuple(meta_cols)
-        self.centroids = VersionedTable(spark, os.path.join(root, "centroids"))
         # cell-partitioned + distinct-set-indexed: probed-cell serving
         # skips whole files via the manifest, no data IO for cold cells
         self.assignments = VersionedTable(
@@ -216,28 +269,16 @@ class AnnIndex(_CellCentroids):
             partition_col="cell_id",
             distinct_index_cols=("cell_id",),
         )
-        self.coarse = VersionedTable(spark, os.path.join(root, "coarse"))
+        self._tables = (self.assignments,)
 
-    # ---- bookkeeping -------------------------------------------------
-    def indexed_version(self) -> int:
-        """Source version the index reflects (0 = never built) — the
-        Delta txn bookmark on the assignments table."""
-        return self.assignments.manifest().get("txns", {}).get(_APP, 0)
+    def _train(self, snap: DataFrame) -> dict:
+        self._train_cells(snap)
+        return self._scorer_state()
 
-    def _best_cells(self, vecs: DataFrame, st: dict) -> DataFrame:
-        """(id, cell_id, sim6) under the configured scorer: flat O(C)
-        position-join or the O(√C) two-level descent — the ONLY point
-        where the scorers diverge; storage/refresh/serve are agnostic."""
-        if self.scorer == "flat":
-            return ivf_best_cells(
-                vecs, st["cents"], self.id_col, self.vec_col, nassign=1
-            )
-        return ivf2_descend(
-            vecs, st["coarse"], st["fine_vecs"], self.wprobe, 1,
-            self.id_col, self.vec_col,
-        ).select(self.id_col, "cell_id", "sim6")
+    def _model(self) -> dict:
+        return self._scorer_state()
 
-    def _assignment_rows(self, vecs: DataFrame, st: dict, v: int) -> DataFrame:
+    def _state_rows(self, vecs: DataFrame, v: int, st: dict) -> tuple:
         best = self._best_cells(vecs, st)
         return (
             vecs.select(self.id_col, self.vec_col, *self.meta_cols)
@@ -249,129 +290,8 @@ class AnnIndex(_CellCentroids):
                 F.lit(v).cast("long").alias("src_version"),
                 F.col(self.vec_col),
                 *[F.col(c) for c in self.meta_cols],
-            )
+            ),
         )
-
-    # ---- build / retrain ----------------------------------------------
-    def build(self) -> int:
-        """Train centroids on the CURRENT source snapshot and assign
-        every vector; returns the indexed source version. Also the
-        RETRAIN path: both tables are atomically overwritten, the
-        refresh bookmark advances (or is preserved on a same-version
-        retrain), and a crash between the two commits is repaired by
-        re-running build (training is seed-deterministic)."""
-        v = self.source.latest_version()
-        if v == 0:
-            raise ValueError("AnnIndex.build: source table is empty")
-        snap = self.source.read(v)
-        n = snap.count()
-        if self.scorer == "ivf2":
-            fine, coarse, f2c = ivf2_train(
-                snap, ncells=self.ncells, id_col=self.id_col,
-                vec_col=self.vec_col, seed=self.seed, corpus_count=n,
-            )
-            self.centroids.commit_overwrite(
-                fine.join(F.broadcast(f2c), "fine_id").select(
-                    F.col("fine_id").alias("cell_id"),
-                    F.col(self.vec_col).alias("centroid"),
-                    F.col("coarse_id"),
-                )
-            )
-            self.coarse.commit_overwrite(
-                coarse.select(
-                    "coarse_id", F.col(self.vec_col).alias("centroid")
-                )
-            )
-        else:
-            ncells = self.ncells or max(16, int(n**0.5))
-            cents = kmeans_centroids(
-                snap, ncells, id_col=self.id_col, vec_col=self.vec_col,
-                seed=self.seed, corpus_count=n,
-            )
-            self.centroids.commit_overwrite(
-                cents.select(
-                    F.col(self.id_col).alias("cell_id"),
-                    F.col(self.vec_col).alias("centroid"),
-                )
-            )
-        rows = self._assignment_rows(snap, self._scorer_state(), v)
-        if self.indexed_version() >= v:
-            # retrain at an already-indexed version: force the rewrite —
-            # the bookmark is already correct and carries forward
-            self.assignments.commit_overwrite(rows)
-        else:
-            self.assignments.commit_overwrite(rows, txn=(_APP, v))
-        return v
-
-    # ---- incremental refresh -------------------------------------------
-    def refresh(
-        self, max_commits: int | None = None, to_version: int | None = None
-    ) -> int:
-        """Fold every source commit since the bookmark into the index;
-        returns the source version now reflected. No-op when current.
-        Backlogs page at ``max_commits`` (default CDC_MAX_COMMITS) —
-        one atomic idempotent commit per page, crash-resumable between
-        pages (the txn bookmark replays exactly-once).
-
-        RETRACTION-AWARE (round 8, VERDICT r7 #1): pure-append pages
-        take the cheap path (assign the delta, one ``merge_upsert``);
-        pages containing deletes/rewrites fold the NET per-key effect
-        (``changes_final_state`` — equality deletes, positional
-        deletes, merge updates, overwrites) into ONE atomic
-        ``commit_replace_keys``: changed keys' stale assignment rows
-        die merge-on-read, final states re-assign against the STORED
-        centroids, removed keys simply get no replacement row. Cost is
-        ∝ the net delta (unchanged-churn keys are dropped by the feed),
-        never corpus size. Every commit shape is expressible since
-        round 9 (restores reviving pos-deleted rows emit keyless
-        full-row inserts), so no source movement forces a rebuild.
-
-        ``to_version`` (round 9 — streaming retraction maintenance):
-        refresh exactly up to that source version instead of the live
-        head. A CDC-stream micro-batch is commit-aligned, so its max
-        ``_commit_version`` is a version boundary; pinning the refresh
-        there keeps the index in lockstep with the stream's delivered
-        offsets, and a replayed batch (to_version <= bookmark) is a
-        no-op — exactly-once without any sink-side state."""
-        page = VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if page < 1:
-            raise ValueError(f"max_commits must be >= 1, got {page}")
-        last = self.indexed_version()
-        if last == 0:
-            raise ValueError("AnnIndex.refresh: build() the index first")
-        now = (
-            self.source.latest_version() if to_version is None else to_version
-        )
-        if to_version is not None and to_version <= last:
-            return last  # replayed/old boundary: exactly-once no-op
-        st = self._scorer_state()
-        while last < now:
-            upto = min(last + page, now)
-            if self.source.window_is_append_only(last, upto):
-                delta = self.source.changes(last, upto)
-                rows = self._assignment_rows(delta, st, upto)
-                self.assignments.merge_upsert(rows, self.id_col, txn=(_APP, upto))
-            else:
-                final = self.source.changes_final_state(
-                    self.id_col, last, upto
-                ).persist()  # feeds both the new rows and the key set
-                ups = final.filter(
-                    F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
-                ).drop(VersionedTable.CDC_TYPE_COL, VersionedTable.CDC_VERSION_COL)
-                rows = (
-                    _empty_like(self.spark, self.assignments)
-                    if ups.isEmpty()  # pure-delete page: nothing to assign
-                    else self._assignment_rows(ups, st, upto)
-                )
-                self.assignments.commit_replace_keys(
-                    rows, final.select(self.id_col), self.id_col,
-                    txn=(_APP, upto),
-                )
-                final.unpersist()
-            last = upto
-        if self.auto_compact:
-            self.assignments.auto_compact()
-        return last
 
     # ---- serving ---------------------------------------------------------
     def _probe_plan(
@@ -570,7 +490,7 @@ class AnnIndex(_CellCentroids):
         return refreshes[-1].mean_sim6 < refreshes[0].mean_sim6 - drop6
 
 
-class PqIndex:
+class PqIndex(DerivedIndex):
     """Persisted PRODUCT-QUANTIZATION index over an append-only
     VersionedTable of embeddings — the memory tier below :class:`AnnIndex`
     on the quantization curve (codes are m small ints per vector; the
@@ -601,6 +521,9 @@ class PqIndex:
     index-served ≡ freshly-encoded-under-the-stored-codebooks is exact
     (pinned in tests/test_ann_index.py)."""
 
+    _app = "pq-index"
+    _vector = True
+
     def __init__(
         self,
         spark: SparkSession,
@@ -611,7 +534,6 @@ class PqIndex:
         m: int = 4,
         ksub: int = 16,
         seed: int = 7,
-        auto_compact: bool = True,
     ):
         self.spark = spark
         self.source = source
@@ -620,21 +542,24 @@ class PqIndex:
         self.m = m
         self.ksub = ksub
         self.seed = seed
-        self.auto_compact = auto_compact  # see AnnIndex.__init__
         self.codebooks = VersionedTable(spark, os.path.join(root, "codebooks"))
         self.codes = VersionedTable(spark, os.path.join(root, "codes"))
+        self._tables = (self.codes,)
 
-    def indexed_version(self) -> int:
-        return self.codes.manifest().get("txns", {}).get(_PQ_APP, 0)
+    def _train(self, snap: DataFrame) -> DataFrame:
+        return _train_codebooks(self, snap)
 
-    def _code_rows(self, vecs: DataFrame, books: DataFrame, v: int) -> DataFrame:
+    def _model(self) -> DataFrame:
+        return self.codebooks.read()
+
+    def _state_rows(self, vecs: DataFrame, v: int, books: DataFrame) -> tuple:
         """Encode L2-normalized ``vecs`` against ``books``; one row per
         (vector, subspace) with the quantization error retained for
         drift accounting (pq_encode's argmin recomputed distance would
-        be a second pass — fold it here via the codebook join)."""
-        un = unit_vectors(vecs, self.id_col, self.vec_col).select(
-            self.id_col, F.col("__unit").alias(self.vec_col)
-        )
+        be a second pass — fold it here via the codebook join). An
+        append window merges on the vector id, so a re-appeared id
+        replaces all its m subspace rows."""
+        un = _unit(vecs, self.id_col, self.vec_col)
         enc = pq_encode(un, books, m=self.m, id_col=self.id_col,
                         vec_col=self.vec_col)
         # err6: ||u_sub - c||^2 of the CHOSEN code, via one more
@@ -658,87 +583,12 @@ class PqIndex:
                 ).cast("long").alias("err6")
             )
         )
-        return err.select(
-            self.id_col, "sub", "code", "err6",
-            F.lit(v).cast("long").alias("src_version"),
+        return (
+            err.select(
+                self.id_col, "sub", "code", "err6",
+                F.lit(v).cast("long").alias("src_version"),
+            ),
         )
-
-    def build(self) -> int:
-        """Train per-subspace codebooks on the current source snapshot
-        (bounded hash-mod sample, driver-side Lloyd — pq_codebooks) and
-        encode every vector; atomic overwrite per table, same
-        bookmark/retrain semantics as AnnIndex.build."""
-        v = self.source.latest_version()
-        if v == 0:
-            raise ValueError("PqIndex.build: source table is empty")
-        snap = self.source.read(v)
-        un = unit_vectors(snap, self.id_col, self.vec_col).select(
-            self.id_col, F.col("__unit").alias(self.vec_col)
-        )
-        books = pq_codebooks(
-            un, m=self.m, ksub=self.ksub, id_col=self.id_col,
-            vec_col=self.vec_col, seed=self.seed,
-        )
-        self.codebooks.commit_overwrite(books)
-        rows = self._code_rows(snap, books, v)
-        if self.indexed_version() >= v:
-            self.codes.commit_overwrite(rows)
-        else:
-            self.codes.commit_overwrite(rows, txn=(_PQ_APP, v))
-        return v
-
-    def refresh(
-        self, max_commits: int | None = None, to_version: int | None = None
-    ) -> int:
-        """Encode every vector changed since the bookmark against the
-        STORED codebooks; paged atomic idempotent commits. Retraction-
-        aware exactly like :meth:`AnnIndex.refresh` (round 8): append
-        pages merge the delta's codes; delete/rewrite pages fold the
-        net per-key effect into one ``commit_replace_keys`` — changed
-        keys' m stale subspace rows die merge-on-read, removed keys get
-        no replacement. ``to_version`` pins the refresh to a CDC-stream
-        batch boundary (see :meth:`AnnIndex.refresh`)."""
-        page = VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if page < 1:
-            raise ValueError(f"max_commits must be >= 1, got {page}")
-        last = self.indexed_version()
-        if last == 0:
-            raise ValueError("PqIndex.refresh: build() the index first")
-        now = (
-            self.source.latest_version() if to_version is None else to_version
-        )
-        if to_version is not None and to_version <= last:
-            return last  # replayed/old boundary: exactly-once no-op
-        books = self.codebooks.read()
-        while last < now:
-            upto = min(last + page, now)
-            if self.source.window_is_append_only(last, upto):
-                delta = self.source.changes(last, upto)
-                rows = self._code_rows(delta, books, upto)
-                # merge key is the vector id; a re-appeared id replaces
-                # all its m subspace rows (merge_upsert matches the key)
-                self.codes.merge_upsert(rows, self.id_col, txn=(_PQ_APP, upto))
-            else:
-                final = self.source.changes_final_state(
-                    self.id_col, last, upto
-                ).persist()
-                ups = final.filter(
-                    F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
-                ).drop(VersionedTable.CDC_TYPE_COL, VersionedTable.CDC_VERSION_COL)
-                rows = (
-                    _empty_like(self.spark, self.codes)
-                    if ups.isEmpty()  # pure-delete page: nothing to encode
-                    else self._code_rows(ups, books, upto)
-                )
-                self.codes.commit_replace_keys(
-                    rows, final.select(self.id_col), self.id_col,
-                    txn=(_PQ_APP, upto),
-                )
-                final.unpersist()
-            last = upto
-        if self.auto_compact:
-            self.codes.auto_compact()
-        return last
 
     def topk(
         self, queries: DataFrame, k: int = 5, shortlist: int = 20,
@@ -785,9 +635,6 @@ class PqIndex:
         return refreshes[-1].mean_err6 > refreshes[0].mean_err6 + rise6
 
 
-_IVFPQ_APP = "ivfpq-index"
-
-
 class IvfPqIndex(_CellCentroids):
     """Persisted IVF-PQ index — the COMPOSITION of :class:`AnnIndex`'s
     inverted-list layout and :class:`PqIndex`'s product-quantized codes
@@ -823,6 +670,8 @@ class IvfPqIndex(_CellCentroids):
     rows; rerank reads shortlist·|Q| source rows. Refresh cost ∝ delta.
     """
 
+    _app = "ivfpq-index"
+
     def __init__(
         self,
         spark: SparkSession,
@@ -834,29 +683,14 @@ class IvfPqIndex(_CellCentroids):
         m: int = 4,
         ksub: int = 16,
         seed: int = 7,
-        auto_compact: bool = True,
         scorer: str = "flat",
         wprobe: int = 3,
     ):
-        if scorer not in ("flat", "ivf2"):
-            raise ValueError(f"scorer must be 'flat' or 'ivf2', got {scorer!r}")
-        self.spark = spark
-        self.source = source
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.ncells = ncells
+        super().__init__(
+            spark, root, source, id_col, vec_col, ncells, seed, scorer, wprobe
+        )
         self.m = m
         self.ksub = ksub
-        self.seed = seed
-        self.auto_compact = auto_compact
-        # scorer="ivf2": cell assignment and query probing DESCEND a
-        # stored two-level centroid structure (O(√C)/vector) — the same
-        # composition AnnIndex offers, so IVF-PQ keeps its memory story
-        # AND the probe-planning story at 1e9 cells
-        self.scorer = scorer
-        self.wprobe = wprobe
-        self.centroids = VersionedTable(spark, os.path.join(root, "centroids"))
-        self.coarse = VersionedTable(spark, os.path.join(root, "coarse"))
         self.codebooks = VersionedTable(spark, os.path.join(root, "codebooks"))
         # cell-partitioned + distinct-set-indexed, exactly like
         # AnnIndex.assignments — but rows carry CODES, not vectors
@@ -866,139 +700,35 @@ class IvfPqIndex(_CellCentroids):
             partition_col="cell_id",
             distinct_index_cols=("cell_id",),
         )
+        self._tables = (self.codes,)
 
-    # ---- bookkeeping -------------------------------------------------
-    def indexed_version(self) -> int:
-        return self.codes.manifest().get("txns", {}).get(_IVFPQ_APP, 0)
+    def _train(self, snap: DataFrame) -> tuple:
+        self._train_cells(snap)
+        return self._scorer_state(), _train_codebooks(self, snap)
 
-    def _rows(self, vecs: DataFrame, st: dict, books: DataFrame,
-              v: int) -> DataFrame:
+    def _model(self) -> tuple:
+        return self._scorer_state(), self.codebooks.read()
+
+    def _state_rows(self, vecs: DataFrame, v: int, model: tuple) -> tuple:
         """(id, cell_id, sub, code, src_version) for ``vecs``: cell by
-        cosine argmax under the configured scorer (flat O(C) position
-        join or ivf2 O(√C) descent; scale-invariant, raw vectors fine),
-        codes from the L2-normalized vectors under the STORED
-        codebooks."""
-        if self.scorer == "flat":
-            best = ivf_best_cells(
-                vecs, st["cents"], self.id_col, self.vec_col, nassign=1
-            ).select(self.id_col, "cell_id")
-        else:
-            best = ivf2_descend(
-                vecs, st["coarse"], st["fine_vecs"], self.wprobe, 1,
-                self.id_col, self.vec_col,
-            ).select(self.id_col, "cell_id")
-        un = unit_vectors(vecs, self.id_col, self.vec_col).select(
-            self.id_col, F.col("__unit").alias(self.vec_col)
-        )
+        cosine argmax under the configured scorer (scale-invariant, raw
+        vectors fine), codes from the L2-normalized vectors under the
+        STORED codebooks."""
+        st, books = model
+        best = self._best_cells(vecs, st).select(self.id_col, "cell_id")
         enc = pq_encode(
-            un, books, m=self.m, id_col=self.id_col, vec_col=self.vec_col
+            _unit(vecs, self.id_col, self.vec_col), books, m=self.m,
+            id_col=self.id_col, vec_col=self.vec_col,
         )
-        return enc.join(best, on=self.id_col).select(
-            self.id_col,
-            "cell_id",
-            F.col("sub"),
-            F.col("code"),
-            F.lit(v).cast("long").alias("src_version"),
+        return (
+            enc.join(best, on=self.id_col).select(
+                self.id_col,
+                "cell_id",
+                F.col("sub"),
+                F.col("code"),
+                F.lit(v).cast("long").alias("src_version"),
+            ),
         )
-
-    # ---- build / retrain ----------------------------------------------
-    def build(self) -> int:
-        v = self.source.latest_version()
-        if v == 0:
-            raise ValueError("IvfPqIndex.build: source table is empty")
-        snap = self.source.read(v)
-        n = snap.count()
-        if self.scorer == "ivf2":
-            fine, coarse, f2c = ivf2_train(
-                snap, ncells=self.ncells, id_col=self.id_col,
-                vec_col=self.vec_col, seed=self.seed, corpus_count=n,
-            )
-            self.centroids.commit_overwrite(
-                fine.join(F.broadcast(f2c), "fine_id").select(
-                    F.col("fine_id").alias("cell_id"),
-                    F.col(self.vec_col).alias("centroid"),
-                    F.col("coarse_id"),
-                )
-            )
-            self.coarse.commit_overwrite(
-                coarse.select(
-                    "coarse_id", F.col(self.vec_col).alias("centroid")
-                )
-            )
-        else:
-            ncells = self.ncells or max(16, int(n**0.5))
-            cents = kmeans_centroids(
-                snap, ncells, id_col=self.id_col, vec_col=self.vec_col,
-                seed=self.seed, corpus_count=n,
-            )
-            self.centroids.commit_overwrite(
-                cents.select(
-                    F.col(self.id_col).alias("cell_id"),
-                    F.col(self.vec_col).alias("centroid"),
-                )
-            )
-        un = unit_vectors(snap, self.id_col, self.vec_col).select(
-            self.id_col, F.col("__unit").alias(self.vec_col)
-        )
-        books = pq_codebooks(
-            un, m=self.m, ksub=self.ksub, id_col=self.id_col,
-            vec_col=self.vec_col, seed=self.seed,
-        )
-        self.codebooks.commit_overwrite(books)
-        rows = self._rows(snap, self._scorer_state(), books, v)
-        if self.indexed_version() >= v:
-            self.codes.commit_overwrite(rows)  # retrain: bookmark correct
-        else:
-            self.codes.commit_overwrite(rows, txn=(_IVFPQ_APP, v))
-        return v
-
-    # ---- incremental refresh -------------------------------------------
-    def refresh(
-        self, max_commits: int | None = None, to_version: int | None = None
-    ) -> int:
-        """Assign + encode only the changed vectors against the STORED
-        centroids/codebooks; same paging, retraction folding, and
-        to_version boundary semantics as :meth:`AnnIndex.refresh`."""
-        page = VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if page < 1:
-            raise ValueError(f"max_commits must be >= 1, got {page}")
-        last = self.indexed_version()
-        if last == 0:
-            raise ValueError("IvfPqIndex.refresh: build() the index first")
-        now = (
-            self.source.latest_version() if to_version is None else to_version
-        )
-        if to_version is not None and to_version <= last:
-            return last  # replayed/old boundary: exactly-once no-op
-        st = self._scorer_state()
-        books = self.codebooks.read()
-        while last < now:
-            upto = min(last + page, now)
-            if self.source.window_is_append_only(last, upto):
-                delta = self.source.changes(last, upto)
-                rows = self._rows(delta, st, books, upto)
-                self.codes.merge_upsert(rows, self.id_col, txn=(_IVFPQ_APP, upto))
-            else:
-                final = self.source.changes_final_state(
-                    self.id_col, last, upto
-                ).persist()
-                ups = final.filter(
-                    F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
-                ).drop(VersionedTable.CDC_TYPE_COL, VersionedTable.CDC_VERSION_COL)
-                rows = (
-                    _empty_like(self.spark, self.codes)
-                    if ups.isEmpty()  # pure-delete page: nothing to encode
-                    else self._rows(ups, st, books, upto)
-                )
-                self.codes.commit_replace_keys(
-                    rows, final.select(self.id_col), self.id_col,
-                    txn=(_IVFPQ_APP, upto),
-                )
-                final.unpersist()
-            last = upto
-        if self.auto_compact:
-            self.codes.auto_compact()
-        return last
 
     # ---- serving ---------------------------------------------------------
     def probed_code_files(self, queries: DataFrame, nprobe: int = 4):

@@ -60,12 +60,13 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from unity_to_bigquery_spark.plans.incremental_agg import ContinuousAggregate
+from unity_to_bigquery_spark.llm.derived_index import DerivedIndex
 from unity_to_bigquery_spark.plans.versioned import VersionedTable
 
-_APP = "bm25-index"
 
+class BM25Index(DerivedIndex):
+    _app = "bm25-index"
 
-class BM25Index:
     def __init__(
         self,
         spark: SparkSession,
@@ -74,14 +75,12 @@ class BM25Index:
         n_buckets: int = 16,
         id_col: str = "doc_id",
         text_col: str = "text",
-        auto_compact: bool = True,
     ):
         self.spark = spark
         self.source = source
         self.n_buckets = n_buckets
         self.id_col = id_col
         self.text_col = text_col
-        self.auto_compact = auto_compact
         self.postings = VersionedTable(
             spark,
             os.path.join(root, "postings"),
@@ -89,6 +88,7 @@ class BM25Index:
             distinct_index_cols=("bucket",),
         )
         self.docstats = VersionedTable(spark, os.path.join(root, "docstats"))
+        self._tables = (self.postings, self.docstats)
         self.term_stats = ContinuousAggregate(
             spark,
             self.postings,
@@ -105,11 +105,6 @@ class BM25Index:
             measures={"sum_dl": "dl_d"},
             handle_deletes=True,
         )
-
-    # ---- bookkeeping -----------------------------------------------------
-    def indexed_version(self) -> int:
-        """Source version the index reflects (0 = never built)."""
-        return self.postings.manifest().get("txns", {}).get(_APP, 0)
 
     def _bucket_py(self, term: str) -> int:
         return int(hashlib.md5(term.encode("utf-8")).hexdigest()[:4], 16) % self.n_buckets
@@ -148,80 +143,14 @@ class BM25Index:
             F.lit("all").alias("grp"),
         )
 
-    # ---- build / retrain ---------------------------------------------------
-    def build(self) -> int:
-        """Index the CURRENT source snapshot; atomic overwrites +
-        bookmarks, then fold the rollups. A rebuild at an already-
-        bookmarked version bypasses the txn no-op check (rule 17)."""
-        v = self.source.latest_version()
-        if v == 0:
-            raise ValueError("BM25Index.build: source table is empty")
-        docs = self.source.read(v)
-        rebuilding = self.indexed_version() >= v
-        self.postings.commit_overwrite(
-            self._posting_rows(docs), txn=None if rebuilding else (_APP, v)
-        )
-        self.docstats.commit_overwrite(
-            self._docstat_rows(docs), txn=None if rebuilding else (_APP, v)
-        )
-        self.term_stats.refresh()
-        self.corpus_stats.refresh()
-        return v
+    def _state_rows(self, docs: DataFrame, v: int, model) -> tuple:
+        return self._posting_rows(docs), self._docstat_rows(docs)
 
-    # ---- incremental refresh -------------------------------------------
-    def refresh(
-        self, max_commits: int | None = None, to_version: int | None = None
-    ) -> int:
-        """Fold source commits since the bookmark (GramIndex protocol):
-        append-only pages append the delta's postings/docstats;
-        delete/rewrite pages fold ``changes_final_state`` into one
-        ``commit_replace_keys`` per state table — then the rollups
-        fold the state tables' OWN change feeds (term df moves only for
-        terms the delta touched). ``to_version`` pins a CDC-stream
-        batch boundary; an old boundary is an exactly-once no-op."""
-        page = VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if page < 1:
-            raise ValueError(f"max_commits must be >= 1, got {page}")
-        last = self.indexed_version()
-        if last == 0:
-            raise ValueError("BM25Index.refresh: build() the index first")
-        now = self.source.latest_version() if to_version is None else to_version
-        if to_version is not None and to_version <= last:
-            return last
-        while last < now:
-            upto = min(last + page, now)
-            if self.source.window_is_append_only(last, upto):
-                delta = self.source.changes(last, upto)
-                self.postings.commit_append(
-                    self._posting_rows(delta), txn=(_APP, upto)
-                )
-                self.docstats.commit_append(
-                    self._docstat_rows(delta), txn=(_APP, upto)
-                )
-            else:
-                final = self.source.changes_final_state(
-                    self.id_col, last, upto
-                ).persist()
-                ups = final.filter(
-                    F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
-                ).drop(
-                    VersionedTable.CDC_TYPE_COL, VersionedTable.CDC_VERSION_COL
-                )
-                keys = final.select(self.id_col)
-                self.postings.commit_replace_keys(
-                    self._posting_rows(ups), keys, self.id_col, txn=(_APP, upto)
-                )
-                self.docstats.commit_replace_keys(
-                    self._docstat_rows(ups), keys, self.id_col, txn=(_APP, upto)
-                )
-                final.unpersist()
-            last = upto
+    def _fold_rollups(self) -> None:
+        """The rollups fold the state tables' OWN change feeds: term df
+        moves only for terms the delta touched."""
         self.term_stats.refresh()
         self.corpus_stats.refresh()
-        if self.auto_compact:
-            self.postings.auto_compact()
-            self.docstats.auto_compact()
-        return last
 
     # ---- serving ---------------------------------------------------------
     def topk(

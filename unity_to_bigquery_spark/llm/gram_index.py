@@ -42,12 +42,13 @@ import os
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from unity_to_bigquery_spark.llm.derived_index import DerivedIndex
 from unity_to_bigquery_spark.plans.versioned import VersionedTable
 
-_APP = "gram-index"
 
+class GramIndex(DerivedIndex):
+    _app = "gram-index"
 
-class GramIndex:
     def __init__(
         self,
         spark: SparkSession,
@@ -59,7 +60,6 @@ class GramIndex:
         id_col: str = "doc_id",
         text_col: str = "text",
         len_col: str = "n_chars",
-        auto_compact: bool = True,
     ):
         self.spark = spark
         self.source = source
@@ -69,10 +69,6 @@ class GramIndex:
         self.id_col = id_col
         self.text_col = text_col
         self.len_col = len_col
-        # threshold auto-OPTIMIZE after refresh (VERDICT r7 #4): keeps
-        # state file count ∝ buckets and merge-on-read delete debt
-        # bounded across arbitrarily many refreshes
-        self.auto_compact = auto_compact
         # bucket-partitioned: serve-time aggregation shuffles within
         # hash-range partitions; compact() keeps file count ∝ buckets
         self.state = VersionedTable(
@@ -81,11 +77,7 @@ class GramIndex:
             partition_col="bucket",
             distinct_index_cols=("bucket",),
         )
-
-    # ---- bookkeeping -----------------------------------------------------
-    def indexed_version(self) -> int:
-        """Source version the index reflects (0 = never built)."""
-        return self.state.manifest().get("txns", {}).get(_APP, 0)
+        self._tables = (self.state,)
 
     # ---- gram extraction -------------------------------------------------
     def _gram_rows(self, docs: DataFrame, v: int) -> DataFrame:
@@ -136,77 +128,10 @@ class GramIndex:
             )
         )
 
-    # ---- build / retrain -------------------------------------------------
-    def build(self) -> int:
-        """Extract grams from the CURRENT source snapshot; atomic
-        overwrite + bookmark. Also the retrain path — a rebuild at an
-        already-bookmarked version bypasses the txn no-op check (the
-        overwrite would silently skip otherwise; CLAUDE.md rule 17)."""
-        v = self.source.latest_version()
-        if v == 0:
-            raise ValueError("GramIndex.build: source table is empty")
-        rows = self._gram_rows(self.source.read(v), v)
-        if self.indexed_version() >= v:
-            self.state.commit_overwrite(rows)
-        else:
-            self.state.commit_overwrite(rows, txn=(_APP, v))
-        return v
-
-    # ---- incremental refresh ---------------------------------------------
-    def refresh(
-        self, max_commits: int | None = None, to_version: int | None = None
-    ) -> int:
-        """Fold all source commits since the bookmark. Pure-append
-        pages stay a PURE APPEND of the delta's gram rows (cost ∝
-        appended docs; no existing state file is touched). Pages
-        containing deletes/rewrites are RETRACTION-AWARE (round 8,
-        VERDICT r7 #1): the net per-key effect
-        (``changes_final_state`` — equality deletes, positional
-        deletes, merge updates) folds into ONE atomic
-        ``commit_replace_keys``: changed docs' stale gram rows die
-        merge-on-read, surviving final states re-extract, removed docs
-        get nothing. Cost ∝ the net delta. Pages long backlogs at
-        ``max_commits`` (default CDC_MAX_COMMITS), one idempotent
-        txn-bookmarked commit per page, crash-resumable between
-        pages. ``to_version`` pins the refresh to a CDC-stream batch
-        boundary (see :meth:`AnnIndex.refresh`); an old boundary is an
-        exactly-once no-op."""
-        page = VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if page < 1:
-            raise ValueError(f"max_commits must be >= 1, got {page}")
-        last = self.indexed_version()
-        if last == 0:
-            raise ValueError("GramIndex.refresh: build() the index first")
-        now = (
-            self.source.latest_version() if to_version is None else to_version
-        )
-        if to_version is not None and to_version <= last:
-            return last  # replayed/old boundary: exactly-once no-op
-        while last < now:
-            upto = min(last + page, now)
-            if self.source.window_is_append_only(last, upto):
-                delta = self.source.changes(last, upto)
-                self.state.commit_append(
-                    self._gram_rows(delta, upto), txn=(_APP, upto)
-                )
-            else:
-                final = self.source.changes_final_state(
-                    self.id_col, last, upto
-                ).persist()
-                ups = final.filter(
-                    F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
-                ).drop(VersionedTable.CDC_TYPE_COL, VersionedTable.CDC_VERSION_COL)
-                self.state.commit_replace_keys(
-                    self._gram_rows(ups, upto),
-                    final.select(self.id_col),
-                    self.id_col,
-                    txn=(_APP, upto),
-                )
-                final.unpersist()
-            last = upto
-        if self.auto_compact:
-            self.state.auto_compact()
-        return last
+    def _state_rows(self, docs: DataFrame, v: int, model) -> tuple:
+        # append pages stay a PURE APPEND: gram rows are immutable facts
+        # about a document, so no existing state file is touched
+        return (self._gram_rows(docs, v),)
 
     # ---- serving ---------------------------------------------------------
     def dup_report(self) -> DataFrame:

@@ -39,12 +39,13 @@ from unity_to_bigquery_spark.llm.dedup import (
     minhash_affine,
     with_shingles,
 )
+from unity_to_bigquery_spark.llm.derived_index import DerivedIndex
 from unity_to_bigquery_spark.plans.versioned import VersionedTable
 
-_APP = "lsh-index"
 
+class LshIndex(DerivedIndex):
+    _app = "lsh-index"
 
-class LshIndex:
     def __init__(
         self,
         spark: SparkSession,
@@ -54,7 +55,6 @@ class LshIndex:
         bands: int = 4,
         id_col: str = "doc_id",
         text_col: str = "text",
-        auto_compact: bool = True,
     ):
         if k % bands:
             raise ValueError(f"k={k} must divide into bands={bands}")
@@ -64,18 +64,13 @@ class LshIndex:
         self.bands = bands
         self.id_col = id_col
         self.text_col = text_col
-        self.auto_compact = auto_compact  # see GramIndex.__init__
         self.buckets = VersionedTable(
             spark,
             os.path.join(root, "buckets"),
             partition_col="band",
             distinct_index_cols=("band",),
         )
-
-    # ---- bookkeeping -----------------------------------------------------
-    def indexed_version(self) -> int:
-        """Source version the index reflects (0 = never built)."""
-        return self.buckets.manifest().get("txns", {}).get(_APP, 0)
+        self._tables = (self.buckets,)
 
     # ---- band-key extraction ---------------------------------------------
     def _band_rows(self, docs: DataFrame, v: int) -> DataFrame:
@@ -116,71 +111,8 @@ class LshIndex:
             F.lit(v).cast("long").alias("src_version"),
         )
 
-    # ---- build / retrain -------------------------------------------------
-    def build(self) -> int:
-        """Band-key the CURRENT snapshot; atomic overwrite + bookmark
-        (retrain at an already-bookmarked version bypasses the txn
-        no-op check — CLAUDE.md rule 17)."""
-        v = self.source.latest_version()
-        if v == 0:
-            raise ValueError("LshIndex.build: source table is empty")
-        rows = self._band_rows(self.source.read(v), v)
-        if self.indexed_version() >= v:
-            self.buckets.commit_overwrite(rows)
-        else:
-            self.buckets.commit_overwrite(rows, txn=(_APP, v))
-        return v
-
-    # ---- incremental refresh ---------------------------------------------
-    def refresh(
-        self, max_commits: int | None = None, to_version: int | None = None
-    ) -> int:
-        """Fold all source commits since the bookmark. Pure-append
-        pages append band rows (cost ∝ appended docs); pages with
-        deletes/rewrites fold the NET per-key effect
-        (``changes_final_state``) into one atomic
-        ``commit_replace_keys`` — changed docs' stale bucket rows die
-        merge-on-read, removed docs stop matching (round 8, same
-        retraction discipline as AnnIndex/GramIndex). Pages long
-        backlogs, idempotent per page, crash-resumable. ``to_version``
-        pins the refresh to a CDC-stream batch boundary (see
-        :meth:`AnnIndex.refresh`)."""
-        page = VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if page < 1:
-            raise ValueError(f"max_commits must be >= 1, got {page}")
-        last = self.indexed_version()
-        if last == 0:
-            raise ValueError("LshIndex.refresh: build() the index first")
-        now = (
-            self.source.latest_version() if to_version is None else to_version
-        )
-        if to_version is not None and to_version <= last:
-            return last  # replayed/old boundary: exactly-once no-op
-        while last < now:
-            upto = min(last + page, now)
-            if self.source.window_is_append_only(last, upto):
-                delta = self.source.changes(last, upto)
-                self.buckets.commit_append(
-                    self._band_rows(delta, upto), txn=(_APP, upto)
-                )
-            else:
-                final = self.source.changes_final_state(
-                    self.id_col, last, upto
-                ).persist()
-                ups = final.filter(
-                    F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
-                ).drop(VersionedTable.CDC_TYPE_COL, VersionedTable.CDC_VERSION_COL)
-                self.buckets.commit_replace_keys(
-                    self._band_rows(ups, upto),
-                    final.select(self.id_col),
-                    self.id_col,
-                    txn=(_APP, upto),
-                )
-                final.unpersist()
-            last = upto
-        if self.auto_compact:
-            self.buckets.auto_compact()
-        return last
+    def _state_rows(self, docs: DataFrame, v: int, model) -> tuple:
+        return (self._band_rows(docs, v),)
 
     # ---- serving ---------------------------------------------------------
     def _verify(self, cand: DataFrame, docs: DataFrame) -> DataFrame:

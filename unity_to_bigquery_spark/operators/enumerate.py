@@ -9,17 +9,54 @@ task — the classic scale cliff. The scalable shape is:
 2. per-partition row counts (tiny: one row per partition);
 3. cumulative offsets over partition ids (a window over N_partition
    rows, trivially small);
-4. position = partition offset + intra-partition row_number (window
-   partitioned by partition id — parallel again).
+4. position = partition offset + intra-partition row index.
 
 No collect, no single-partition stage; the only narrow data is the
 N-partition offset table, broadcast back onto the sorted rows.
+
+Steps 2 and 4 must read ONE evaluation of the range exchange: its
+boundaries come from a sample seeded by the RDD id, so a second
+evaluation splits the rows differently and the offsets stop matching
+the rows they are added to. Both therefore read a non-deterministic
+CTE (it carries ``spark_partition_id()``), which Spark plans once and
+shares — the row side and the offset side see the same partitions.
 """
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+
+
+def _with_partition_offsets(
+    df: DataFrame, order_cols: list, num_partitions: int | None, measure: str
+) -> DataFrame:
+    """``df`` range-partitioned and sorted on ``order_cols``, plus
+    ``__pid`` (range partition), ``__mid`` (monotonically increasing id,
+    so the intra-partition index is ``__mid - (__pid << 33)``) and
+    ``__offset``: the SQL aggregate ``measure`` summed over all earlier
+    partitions (0 for the first)."""
+    n = num_partitions or int(
+        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
+    )
+    s = (
+        df.repartitionByRange(n, *order_cols)
+        .sortWithinPartitions(*order_cols)
+        .select(
+            "*",
+            F.spark_partition_id().alias("__pid"),
+            F.monotonically_increasing_id().alias("__mid"),
+        )
+    )
+    return df.sparkSession.sql(
+        "WITH t AS (SELECT * FROM {s}) "
+        "SELECT /*+ BROADCAST(o) */ t.*, o.__offset FROM t JOIN ("
+        "  SELECT __pid, COALESCE(SUM(__m) OVER (ORDER BY __pid ROWS BETWEEN"
+        "    UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS __offset"
+        f"  FROM (SELECT __pid, {measure} AS __m FROM t GROUP BY __pid)"
+        ") o ON t.__pid = o.__pid",
+        s=s,
+    )
 
 
 def global_enumerate(
@@ -31,22 +68,10 @@ def global_enumerate(
     """Attach 1-based ``position_col`` reflecting the total order of
     ``order_cols`` (must be a unique total order for determinism).
     """
-    n = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    s = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
-    s = s.withColumn("__pid", F.spark_partition_id())
-    counts = s.groupBy("__pid").agg(F.count(F.lit(1)).alias("__cnt"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = counts.withColumn(
-        "__offset", F.coalesce(F.sum("__cnt").over(w_off), F.lit(0))
-    ).select("__pid", "__offset")
-    w_in = Window.partitionBy("__pid").orderBy(*order_cols)
-    return (
-        s.withColumn("__rn", F.row_number().over(w_in))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(position_col, (F.col("__offset") + F.col("__rn")))
-        .drop("__pid", "__rn", "__offset")
+    t = _with_partition_offsets(df, order_cols, num_partitions, "COUNT(1)")
+    rn = F.col("__mid") - F.shiftleft(F.col("__pid").cast("long"), 33) + 1
+    return t.withColumn(position_col, F.col("__offset") + rn).drop(
+        "__pid", "__mid", "__offset"
     )
 
 
@@ -65,24 +90,13 @@ def global_cumsum(
     back. The classic scale cliff this avoids is
     ``SUM(x) OVER (ORDER BY key)`` funneling every row through one
     task."""
-    n = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
-    s = df.repartitionByRange(n, *order_cols).sortWithinPartitions(*order_cols)
-    s = s.withColumn("__pid", F.spark_partition_id())
-    sums = s.groupBy("__pid").agg(F.sum(value_col).alias("__psum"))
-    w_off = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    offsets = sums.withColumn(
-        "__offset", F.coalesce(F.sum("__psum").over(w_off), F.lit(0))
-    ).select("__pid", "__offset")
+    quoted = "`" + value_col.replace("`", "``") + "`"
+    t = _with_partition_offsets(df, order_cols, num_partitions, f"SUM({quoted})")
     w_in = (
         Window.partitionBy("__pid")
-        .orderBy(*order_cols)
+        .orderBy("__mid")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    return (
-        s.withColumn("__run", F.sum(value_col).over(w_in))
-        .join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, F.col("__offset") + F.col("__run"))
-        .drop("__pid", "__run", "__offset")
-    )
+    return t.withColumn(
+        out_col, F.col("__offset") + F.sum(value_col).over(w_in)
+    ).drop("__pid", "__mid", "__offset")

@@ -1390,10 +1390,14 @@ class VersionedTable:
         Delta's ``timestampAsOf`` / Iceberg's snapshot-at-timestamp
         resolution. Commit timestamps are taken as recorded (a clock
         regression between processes resolves to the LAST qualifying
-        version, matching read-your-writes for the later committer).
-        Raises NoSuchVersionError for an instant before the first
-        commit. O(versions) inline-JSON reads — audit fields never need
-        delta reconstruction (same argument as :meth:`history`)."""
+        version, matching read-your-writes for the later committer); a
+        manifest without ``ts`` never qualifies. Raises
+        NoSuchVersionError for an instant before the first commit.
+        O(versions) inline-JSON reads — audit fields never need delta
+        reconstruction (same argument as :meth:`history`). Multi-table
+        consistency: reading several tables ``read(version_at(T))`` pins
+        them all to the same wall-clock instant — the cross-table
+        snapshot a report pipeline needs."""
         best = None
         for v in self.versions():
             m = self._read_json(v)
@@ -3580,8 +3584,6 @@ class VersionedTable:
         set) or that recorded no bloom (conservative). No false
         negatives by construction — a present value's writing file
         set exactly these bits."""
-        import base64
-
         return self._prune_bloom(self.manifest(version), col, value)
 
     @staticmethod
@@ -3772,10 +3774,8 @@ class VersionedTable:
         stats-indexed column plans against the touched partition, not
         the table (VERDICT r11 #5)."""
         schema_cols = set(self._schema_dtypes(m)) or None
-        # every sub-prune runs against the FULL resolved manifest (the
-        # vectorized path caches stat arrays per (version, col) — a
-        # restricted file list under the same version would poison that
-        # cache); results intersect as sets afterwards
+        # every sub-prune runs against the FULL resolved manifest;
+        # results intersect as sets afterwards
         surviving: set | None = None
 
         def narrow(files: list) -> None:
@@ -8023,23 +8023,6 @@ class VersionedTable:
             dest._mapping_state_override = _UNSET
         dest._staged_stats = {}
         return dest
-
-    def version_at(self, ts: float) -> int:
-        """Timestamp-based time travel (Delta's TIMESTAMP AS OF):
-        the latest version whose commit time is <= ``ts`` (unix
-        seconds). Raises NoSuchVersionError when ts precedes the first
-        commit. Multi-table consistency: reading several tables
-        ``read(version_at(T))`` pins them all to the same wall-clock
-        instant — the cross-table snapshot a report pipeline needs."""
-        best = None
-        for v in self.versions():
-            if self._read_json(v)["ts"] <= ts:
-                best = v
-        if best is None:
-            raise NoSuchVersionError(
-                f"no version at or before ts={ts} in {self.root}"
-            )
-        return best
 
     def export_manifest(self, version: int | None = None) -> str:
         """Snapshot export for external engines (Delta ``GENERATE

@@ -242,6 +242,23 @@ def initial_fills(m: dict, file_version: int, as_of: int | None = None) -> dict:
     return fills
 
 
+def refuse_unfilled_generated(m: dict, after: int = 0) -> None:
+    """Raise a ValueError naming the first generated column that a live
+    file of ``m`` added after version ``after`` predates. Such a file
+    holds no value for the column, and these readers cannot evaluate
+    its Spark SQL expression in pyarrow; ``VersionedTable.read()``
+    computes it at scan."""
+    added = [m.get("file_versions", {}).get(f, 0) for f in m["files"]]
+    added = [v for v in added if not after or v > after]
+    for name, g in (m.get("generated_columns") or {}).items():
+        if any(v < int(g["version"]) for v in added):
+            raise ValueError(
+                f"versioned_table: generated column {name!r} is not stored "
+                "in files written before it was added — read this table "
+                "via the programmatic VersionedTable.read() API"
+            )
+
+
 def arrow_schema(schema):
     """The declared StructType as the Arrow schema ``read()`` yields.
     A type with no Arrow equivalent fails the reader's construction
@@ -517,6 +534,12 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # rather than silently reading main.
         self.branch = options.get("branch")
         self._t = detached_table(self.root, self.branch)
+        try:
+            m = self._t.manifest()
+        except FileNotFoundError:
+            m = None  # no log yet: no file can predate a generated column
+        if m is not None:
+            refuse_unfilled_generated(m, self.start_version)
         # Validate the bootstrap version eagerly (ADVICE r6): a
         # too-high starting_version would otherwise yield a silently
         # EMPTY stream (latestOffset < initialOffset) — a misconfigured

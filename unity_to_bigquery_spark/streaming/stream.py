@@ -685,9 +685,9 @@ def ann_index_ingest_sink(index, app_id: str):
     ``txn=(app_id, batch_id)`` (a replayed micro-batch no-ops) and the
     refresh carries the index's own source-version bookmark, so a
     crash anywhere between append, refresh, and checkpoint advance
-    re-runs as no-ops. Works with any derived-state index honoring the
-    build/refresh/indexed_version/source contract — AnnIndex, PqIndex,
-    and the exact-substring GramIndex (llm/gram_index.py) all do, so
+    re-runs as no-ops. Works with any index implementing the
+    build/refresh/indexed_version/source contract of
+    ``llm.derived_index.DerivedIndex`` — every derived index does, so
     one sink maintains vector AND dedup state from the same stream."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -724,8 +724,8 @@ def index_cdc_maintenance_sink(index):
     txn in the index table's own manifest, so a replayed micro-batch
     (same or older boundary) no-ops; a crash between the refresh and
     the checkpoint advance replays as a no-op too. Works with any index
-    honoring the build/refresh(to_version)/indexed_version/source
-    contract — AnnIndex, PqIndex, GramIndex, LshIndex.
+    implementing the build/refresh(to_version)/indexed_version/source
+    contract of ``llm.derived_index.DerivedIndex``.
 
     Differential invariant (tests/test_streaming.py): drained stream
     over interleaved append+delete commits leaves index state ≡ a
