@@ -973,6 +973,14 @@ def test_positional_deletes_read_and_time_travel(spark, root):
     )
     assert sorted(r.k for r in t.read().collect()) == [0, 1, 3, 4, 6, 7, 8, 9]
     assert sorted(r.k for r in t.read(v1).collect()) == list(range(10))
+    # the deletion vector is decoded on the driver: applying it starts
+    # no Python worker and shuffles nothing
+    for df in (t.read(), t.read_pruned_point("k", 3)):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "MapInPandas" not in plan, plan
+        assert "Exchange hashpartitioning" not in plan, plan
+    assert t.read_pruned_point("k", 5).count() == 0
 
     # composes with an equality delete (k=7) on the same file
     t.commit_delete_where(spark.createDataFrame([(7,)], "k INT"), "k")

@@ -465,6 +465,40 @@ def _dv_decode(blob: bytes):
     return np.concatenate(res)
 
 
+def _pos_delete_ordinals(paths, targets=None) -> dict:
+    """{target data file: int64 array of deleted row ordinals} over
+    positional-delete sidecars of both formats — the one loader behind
+    every positional-delete consumer. Runs with pyarrow in the calling
+    process: on the driver for ``VersionedTable._pairs_of`` and the
+    count paths, inside the DSv2 executors for
+    ``versioned_stream.pos_ordinals``. A sidecar with a ``dv`` column
+    holds roaring-lite bitmaps (:func:`_dv_decode`), else legacy
+    (file, pos) rows. ``targets`` keeps only those files before any
+    decode. Arrays are not deduplicated across sidecars: DV entries
+    are disjoint by construction, and legacy ones may overlap."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    keep = None if targets is None else pa.array(sorted(targets), pa.string())
+    found: dict = {}
+    for p in paths:
+        tbl = pq.read_table(p)
+        if keep is not None:
+            tbl = tbl.filter(pc.is_in(tbl.column("file"), value_set=keep))
+        files = tbl.column("file").to_pylist()
+        if "dv" in tbl.column_names:
+            for f, blob in zip(files, tbl.column("dv").to_pylist()):
+                found.setdefault(f, []).append(_dv_decode(blob))
+        else:
+            pos = tbl.column("pos").to_numpy().astype(np.int64, copy=False)
+            rel = np.asarray(files, dtype=object)
+            for f in set(files):
+                found.setdefault(f, []).append(pos[rel == f])
+    return {f: np.concatenate(parts) for f, parts in found.items()}
+
+
 def _scan_top_keyword(s: str, matcher) -> list[int]:
     """Indices where ``matcher(s, i)`` fires at paren depth 0 outside
     single/double-quoted literals — the keyword scanner behind the SQL
@@ -2328,47 +2362,32 @@ class VersionedTable:
         self, entries: list, targets: set | None = None
     ) -> DataFrame:
         """(__rel, __pos) pairs of positional-delete entries, both
-        formats: DV entries (round 12 — parquet sidecars of
-        (file, dv BINARY, n)) decode their roaring-lite bitmaps
-        EXECUTOR-side via mapInPandas, so driver cost never scales with
-        deleted-row count; legacy (file, pos) pair parquets read
-        directly. ``targets`` prunes to the files being scanned before
-        any decode."""
-        import pandas as pd  # noqa: F401 — mapInPandas yields frames
+        formats, read and decoded on the driver by
+        :func:`_pos_delete_ordinals` (``targets`` prunes to the files
+        being scanned before any decode) and handed to Spark as one
+        Arrow table: no Python worker, no shuffle. The driver already
+        holds this set, because every consumer broadcasts it, and the
+        manifest's per-target ``counts`` size it before any read. Not
+        deduplicated: every consumer is a semi- or anti-join."""
+        import numpy as np
+        import pyarrow as pa
 
-        tlist = sorted(targets) if targets is not None else None
-        parts = []
-        dv = [d for d in entries if d.get("dv")]
-        legacy = [d for d in entries if not d.get("dv")]
-        if dv:
-            sdf = self.spark.read.parquet(
-                *[os.path.join(self.root, DATA_DIR, d["file"]) for d in dv]
-            ).select("file", "dv")
-            if tlist is not None:
-                sdf = sdf.filter(F.col("file").isin(tlist))
-
-            def explode(batches):
-                import pandas as _pd
-
-                for pdf in batches:
-                    for f, blob in zip(pdf["file"], pdf["dv"]):
-                        ords = _dv_decode(bytes(blob))
-                        yield _pd.DataFrame({"file": f, "pos": ords})
-
-            parts.append(sdf.mapInPandas(explode, "file string, pos long"))
-        if legacy:
-            p = self.spark.read.parquet(
-                *[os.path.join(self.root, DATA_DIR, d["file"]) for d in legacy]
-            ).select("file", "pos")
-            if tlist is not None:
-                p = p.filter(F.col("file").isin(tlist))
-            parts.append(p)
-        out = parts[0]
-        for extra in parts[1:]:
-            out = out.unionByName(extra)
-        return out.select(
-            F.col("file").alias("__rel"), F.col("pos").alias("__pos")
-        ).distinct()
+        by_file = _pos_delete_ordinals(
+            [os.path.join(self.root, DATA_DIR, d["file"]) for d in entries],
+            targets,
+        )
+        files = sorted(by_file)
+        sizes = [by_file[f].size for f in files]
+        tbl = pa.table({
+            "__rel": pa.array(files, pa.string()).take(
+                pa.array(np.repeat(np.arange(len(files)), sizes))
+            ),
+            "__pos": pa.array(
+                np.concatenate([by_file[f] for f in files])
+                if files else np.empty(0, dtype=np.int64)
+            ),
+        })
+        return self.spark.createDataFrame(tbl, "__rel STRING, __pos BIGINT")
 
     def _scan_live(
         self, m: dict, files: list[str], with_lineage: bool = False
@@ -2607,7 +2626,7 @@ class VersionedTable:
         both = prev_files & cur_files
         pos_targets = sorted({t for d in new_pos for t in d["targets"] if t in both})
         if pos_targets:
-            pairs = self._pos_pairs(new_pos)
+            pairs = self._pairs_of(new_pos)
             tgroups: dict[tuple, list[str]] = {}
             for f in pos_targets:
                 tgroups.setdefault(self._cdc_applicable(m_prev, f), []).append(f)
@@ -2626,7 +2645,7 @@ class VersionedTable:
                 ]
                 if prior:
                     df = df.join(
-                        F.broadcast(self._pos_pairs(prior)),
+                        F.broadcast(self._pairs_of(prior)),
                         ["__rel", "__pos"],
                         "left_anti",
                     )
@@ -2654,7 +2673,7 @@ class VersionedTable:
             {t for d in gone_pos for t in d["targets"] if t in both}
         )
         if rev_targets:
-            dropped = self._pos_pairs(gone_pos)
+            dropped = self._pairs_of(gone_pos)
             rgroups: dict[tuple, list[str]] = {}
             for f in rev_targets:
                 a = self._cdc_applicable(m_prev, f)
@@ -2679,7 +2698,7 @@ class VersionedTable:
                 ]
                 if still:
                     df = df.join(
-                        F.broadcast(self._pos_pairs(still)),
+                        F.broadcast(self._pairs_of(still)),
                         ["__rel", "__pos"],
                         "left_anti",
                     )
@@ -2687,12 +2706,6 @@ class VersionedTable:
                 df = self._cdc_anti_all(df.select(*out_cols), bsig)
                 stamp(self._cdc_anti_all(df, gone_eq), "insert")
         return frames
-
-    def _pos_pairs(self, entries: list) -> DataFrame:
-        """Union of positional-delete entries as a distinct
-        (__rel, __pos) DataFrame — DV sidecars decoded executor-side,
-        legacy pair files read directly (:meth:`_pairs_of`)."""
-        return self._pairs_of(entries)
 
     # live-content-identical rewrites: the live view before == after,
     # so they emit no change rows (Delta CDF's OPTIMIZE behavior)
@@ -2896,10 +2909,19 @@ class VersionedTable:
             return empty.withColumn(
                 self.CDC_TYPE_COL, F.lit(None).cast("string")
             ).withColumn(self.CDC_VERSION_COL, F.lit(None).cast("long"))
+        from pyspark.sql.types import StructType
+
         out = frames[0]
         for fdf in frames[1:]:
             out = out.unionByName(fdf, allowMissingColumns=True)
-        return out
+        # one column order whatever the window held: to_version's
+        # schema (then the lineage id, as read() places it), columns
+        # dropped inside the window, then the two change columns
+        cdc = (self.CDC_TYPE_COL, self.CDC_VERSION_COL)
+        table_cols = [f.name for f in StructType.fromDDL(m_to["schema"]).fields]
+        head = [c for c in table_cols + [self.ROW_ID_COL] if c in out.columns]
+        dropped = [c for c in out.columns if c not in head and c not in cdc]
+        return out.select(*head, *dropped, *cdc)
 
     def changes_with_updates(
         self,
@@ -3161,18 +3183,19 @@ class VersionedTable:
             else:
                 legacy.append(d)
         if legacy:
-            import pyarrow.parquet as pq
-
-            pairs: set[tuple] = set()
-            for d in legacy:
-                tbl = pq.read_table(
-                    os.path.join(self.root, DATA_DIR, d["file"]),
-                    columns=["file", "pos"],
-                )
-                fs, ps = tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
-                pairs.update((f, p) for f, p in zip(fs, ps) if f in live)
-            total += len(pairs)
+            total += sum(self._legacy_pos_counts(legacy, live).values())
         return total
+
+    def _legacy_pos_counts(self, entries: list, live: set) -> dict:
+        """{live target file: distinct deleted ordinals} of legacy
+        pair-file entries, which may overlap each other."""
+        import numpy as np
+
+        by_file = _pos_delete_ordinals(
+            [os.path.join(self.root, DATA_DIR, d["file"]) for d in entries],
+            live,
+        )
+        return {f: int(np.unique(a).size) for f, a in by_file.items()}
 
     def snapshot_minmax(
         self, col: str, version: int | None = None
@@ -3299,19 +3322,8 @@ class VersionedTable:
                             per_file_sub[f] = per_file_sub.get(f, 0) + int(n)
                 else:
                     legacy.append(d)
-            if legacy:
-                import pyarrow.parquet as _pq
-
-                pairs: set = set()
-                for d in legacy:
-                    tbl = _pq.read_table(
-                        os.path.join(self.root, DATA_DIR, d["file"]),
-                        columns=["file", "pos"],
-                    )
-                    fs, ps = tbl.column(0).to_pylist(), tbl.column(1).to_pylist()
-                    pairs.update((f, p) for f, p in zip(fs, ps) if f in live)
-                for f, _p in pairs:
-                    per_file_sub[f] = per_file_sub.get(f, 0) + 1
+            for f, n in self._legacy_pos_counts(legacy, live).items():
+                per_file_sub[f] = per_file_sub.get(f, 0) + n
         fields = [fld["name"] for fld in spec]
         stats = m.get("stats", {})
         agg: dict = {}
@@ -6722,8 +6734,8 @@ class VersionedTable:
         file, and each file's ordinals encode as a roaring-lite bitmap
         (:func:`_dv_encode`, ~2 bytes/row) in ONE parquet sidecar of
         (file, dv BINARY, n). Every data file stays untouched; reads
-        decode the bitmaps executor-side and anti-join on
-        ``_metadata.row_index``.
+        decode the bitmaps on the driver (:meth:`_pairs_of`) and
+        broadcast anti-join them on ``_metadata.row_index``.
 
         Why DVs, not pair files: the manifest entry carries only the
         target list and per-target COUNTS, so PLANNER cost —
@@ -6744,6 +6756,8 @@ class VersionedTable:
         manifest — a typo'd path is an error, not a silent no-op.
         ``txn`` gives streaming sinks the standard exactly-once
         idempotence."""
+        import pyarrow.parquet as pq
+
         if txn is not None and (
             self.manifest().get("txns", {}).get(txn[0], -1) >= txn[1]
         ):
@@ -6806,14 +6820,6 @@ class VersionedTable:
                     .coalesce(1)
                     .write.mode("error").parquet(target_dir)
                 )
-                counts = {
-                    r.file: int(r.n)
-                    for r in self.spark.read.parquet(target_dir)
-                    .select("file", "n").collect()
-                }
-                if not counts:
-                    # every ordinal already dead: nothing to commit
-                    return base["version"]
                 rel = [
                     os.path.relpath(
                         os.path.join(dp, f),
@@ -6823,6 +6829,19 @@ class VersionedTable:
                     for f in fs
                     if f.endswith(".parquet")
                 ]
+                counts = {}
+                for r in rel:
+                    sidecar = pq.read_table(
+                        os.path.join(self.root, DATA_DIR, r),
+                        columns=["file", "n"],
+                    )
+                    counts.update(zip(
+                        sidecar.column("file").to_pylist(),
+                        sidecar.column("n").to_pylist(),
+                    ))
+                if not counts:
+                    # every ordinal already dead: nothing to commit
+                    return base["version"]
                 if len(rel) != 1:
                     raise RuntimeError(
                         f"DV sidecar stage produced {len(rel)} files"

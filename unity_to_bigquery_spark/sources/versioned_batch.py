@@ -186,12 +186,11 @@ class VersionedTableBatchReader(DataSourceReader):
         tbl = pq.read_table(partition.path)
         if partition.pos_anti:
             dead = pos_ordinals(partition.pos_anti)
-            if dead:
+            if dead.size:
                 # vectorized dead-ordinal drop (VERDICT r13 #8): a
                 # boolean mask, no O(rows) Python list
                 mask = np.ones(tbl.num_rows, dtype=bool)
-                idx = np.fromiter(dead, dtype=np.int64, count=len(dead))
-                mask[idx[idx < tbl.num_rows]] = False
+                mask[dead[dead < tbl.num_rows]] = False
                 tbl = tbl.filter(pa.array(mask))
         for p, k, rk in partition.anti:
             if rk not in tbl.column_names:

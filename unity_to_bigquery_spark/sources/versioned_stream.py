@@ -333,37 +333,21 @@ def data_columns(tbl, spec, target) -> list:
     return cols
 
 
-def pos_ordinals(pairs) -> set[int]:
-    """Executor-side union of positional-delete ordinals for one target
-    file, over (pairfile_path, target_rel) pairs — handles BOTH formats
-    (rule 28): DV sidecars (``dv`` BINARY column ⇒ roaring-lite decode)
-    and legacy (file, pos) row pairs. The one true loader's pyarrow
-    twin (the session-side loader is ``VersionedTable._pairs_of``)."""
-    import pyarrow.parquet as pq
+def pos_ordinals(pairs):
+    """Deleted row ordinals (int64 array) of one target data file over
+    its (sidecar_path, target_rel) pairs, read inside the executor by
+    the one positional-delete loader,
+    ``plans.versioned._pos_delete_ordinals`` (both formats, rule 28)."""
+    import numpy as np
 
-    from unity_to_bigquery_spark.plans.versioned import _dv_decode
+    from unity_to_bigquery_spark.plans.versioned import _pos_delete_ordinals
 
-    out: set[int] = set()
-    for p, rel in pairs:
-        pf = pq.ParquetFile(p)
-        names = pf.schema_arrow.names
-        if "dv" in names:
-            pt = pq.read_table(p, columns=["file", "dv"])
-            for fname, blob in zip(
-                pt.column(0).to_pylist(), pt.column(1).to_pylist()
-            ):
-                if fname == rel:
-                    out.update(int(x) for x in _dv_decode(bytes(blob)))
-        else:
-            pt = pq.read_table(p, columns=["file", "pos"])
-            out.update(
-                pos
-                for fname, pos in zip(
-                    pt.column(0).to_pylist(), pt.column(1).to_pylist()
-                )
-                if fname == rel
-            )
-    return out
+    by_file = _pos_delete_ordinals(
+        sorted({p for p, _rel in pairs}), {rel for _p, rel in pairs}
+    )
+    if not by_file:
+        return np.empty(0, dtype=np.int64)
+    return np.concatenate(list(by_file.values()))
 
 
 class _FilePartition(InputPartition):
@@ -859,21 +843,15 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                 if partition.pos_match
                 else None
             )
-            if dead or match_pos is not None:
+            if dead.size or match_pos is not None:
                 # vectorized ordinal selection (VERDICT r13 #8): a
-                # boolean mask built from the ordinal sets, no O(rows)
-                # Python loop
+                # boolean mask built from the ordinal arrays, no
+                # O(rows) Python loop
                 mask = np.ones(n, dtype=bool)
-                if dead:
-                    idx = np.fromiter(dead, dtype=np.int64, count=len(dead))
-                    mask[idx[idx < n]] = False
+                mask[dead[dead < n]] = False
                 if match_pos is not None:
                     m2 = np.zeros(n, dtype=bool)
-                    if match_pos:
-                        idx = np.fromiter(
-                            match_pos, dtype=np.int64, count=len(match_pos)
-                        )
-                        m2[idx[idx < n]] = True
+                    m2[match_pos[match_pos < n]] = True
                     mask &= m2
                 keep = pa.array(mask)
                 tbl = tbl.filter(keep)
