@@ -136,30 +136,92 @@ def test_merge_upsert_emits_self_canceling_rewrite_cdc(spark, root):
     }
 
 
-def test_signed_fold_equals_snapshot_groupby_at_every_version(spark, root):
-    """The headline invariant: fold(changes_with_type(0, v)) ==
-    groupBy(read(v)) for EVERY v across a mixed commit history."""
-    import pyspark.sql.functions as F
+def _phys_names(t, v):
+    """{physical name: logical name} of version ``v``'s columns. A
+    physical name is fixed for a field's lifetime (it is the column's
+    name before mapping was enabled), so it matches one field across a
+    rename and tells a re-added name from the dropped field."""
+    from pyspark.sql.types import StructType
 
-    t = VersionedTable(spark, root)
-    t.commit_append(spark.createDataFrame(
-        [(i, i % 3, float(i)) for i in range(30)], "id INT, g INT, x DOUBLE"
-    ))
-    t.commit_delete_where(
-        spark.createDataFrame([(i,) for i in range(0, 30, 5)], "id INT"), "id"
+    m = t.manifest(v)
+    phys = {e["name"]: e["phys"] for e in m.get("column_mapping") or []}
+    return {
+        phys.get(f.name, f.name): f.name
+        for f in StructType.fromDDL(m["schema"]).fields
+    }
+
+
+def _assert_same_multiset(lhs, rhs, what):
+    extra, missing = lhs.exceptAll(rhs).collect(), rhs.exceptAll(lhs).collect()
+    assert not extra and not missing, f"{what}: +{extra} -{missing}"
+
+
+def test_signed_fold_equals_snapshot_groupby_at_every_version(spark, root):
+    """The headline invariant, checked against read() alone over an op
+    mix of every commit shape: for EVERY v, fold(changes_with_type(0,
+    v)) == groupBy(read(v)); row by row, the inserts minus the deletes
+    of (v-1, v] equal read(v) minus read(v-1) as multisets; and the
+    whole window (0, last] nets to the last snapshot on every column
+    that reads the same at every version (no default, not generated)."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.types import StructType
+
+    schema = (
+        "id INT, g INT, x DOUBLE, w INT, tag STRING, "
+        "props STRUCT<a: INT, b: STRING>"
     )
-    t.commit_append(spark.createDataFrame(
-        [(i, i % 3, float(i)) for i in range(30, 40)], "id INT, g INT, x DOUBLE"
-    ))
-    t.commit_overwrite(spark.createDataFrame(
-        [(i, i % 2, float(2 * i)) for i in range(10)], "id INT, g INT, x DOUBLE"
-    ))
-    t.commit_delete_where(spark.createDataFrame([(4,), (6,)], "id INT"), "id")
-    for v in range(1, t.latest_version() + 1):
-        feed = t.changes_with_type(0, v)
-        sign = F.when(F.col(CT) == "delete", F.lit(-1)).otherwise(F.lit(1))
+
+    def rows(ids, scale=1.0):
+        return spark.createDataFrame(
+            [(i, i % 3, scale * i, 10 * i, f"t{i}", (i, f"p{i}")) for i in ids],
+            schema,
+        )
+
+    def keys(ids):
+        return spark.createDataFrame([(i,) for i in ids], "id INT")
+
+    t = VersionedTable(spark, root, partition_col="g")
+    t.commit_append(rows(range(30)))
+    t.commit_delete_where(keys(range(0, 30, 5)), "id")
+    t.commit_append(rows(range(30, 40)))
+    t.delete_rows_where("id IN (7, 31)", mode="mor")  # deletion vector
+    t.merge_upsert(rows([1, 2, 40], scale=2.0), "id")
+    t.commit_replace_where(rows([1, 4, 13], scale=3.0), [1])
+    v = t.commit_delete_where(keys([8]), "id")
+    t.restore(v - 1)  # reverts an equality delete
+    v = t.delete_rows_where("id = 11", mode="mor")
+    t.restore(v - 1)  # reverts a positional delete
+    t.compact()
+    t.commit_overwrite(rows(range(20), scale=0.5))
+    t.rename_column("tag", "label")
+    t.rename_nested_field("props", "a", "units")
+    t.add_column("note", "string", default="'n/a'")
+    t.add_generated_column("x2", "double", "x * 2")
+    t.drop_column("w")
+    t.commit_append(  # re-adds the dropped name as a new field
+        spark.createDataFrame(
+            [(50 + i, i % 3, float(i), f"n{i}", (i, None), "new", 2.0 * i, -i)
+             for i in range(3)],
+            "id INT, g INT, x DOUBLE, label STRING, "
+            "props STRUCT<units: INT, b: STRING>, note STRING, x2 DOUBLE, "
+            "w INT",
+        ),
+        merge_schema=True,
+    )
+    t.commit_delete_where(keys([3, 6, 51]), "id")
+
+    def split(feed, cols):
+        return (
+            feed.filter(F.col(CT) == "insert").select(*cols),
+            feed.filter(F.col(CT) == "delete").select(*cols),
+        )
+
+    last = t.latest_version()
+    sign = F.when(F.col(CT) == "delete", F.lit(-1)).otherwise(F.lit(1))
+    for v in range(1, last + 1):
         folded = (
-            feed.groupBy("g")
+            t.changes_with_type(0, v)
+            .groupBy("g")
             .agg(
                 F.sum(sign).alias("n"),
                 F.sum(sign * F.floor(F.col("x") * 1e6 + 0.5).cast("long")).alias("s6"),
@@ -173,6 +235,34 @@ def test_signed_fold_equals_snapshot_groupby_at_every_version(spark, root):
         assert sorted(map(tuple, folded.collect())) == sorted(
             map(tuple, direct.collect())
         ), f"fold != snapshot at version {v}"
+
+        # row level, on v's columns that version v-1 also has
+        new = _phys_names(t, v)
+        old = _phys_names(t, v - 1) if v > 1 else {p: p for p in new}
+        shared = [(old[p], n) for p, n in new.items() if p in old]
+        types = {
+            f.name: f.dataType
+            for f in StructType.fromDDL(t.manifest(v)["schema"]).fields
+        }
+        cols = [n for _o, n in shared]
+        # a cast between structs is positional: it carries a member rename
+        prev = (t.read(v - 1) if v > 1 else t.read(v).limit(0)).select(
+            *[F.col(o).cast(types[n]).alias(n) for o, n in shared]
+        )
+        ins, dels = split(t.changes_with_type(v - 1, v), cols)
+        _assert_same_multiset(
+            ins.unionAll(prev),
+            dels.unionAll(t.read(v).select(*cols)),
+            f"commit {v} ({t.manifest(v)['op']})",
+        )
+
+    m = t.manifest(last)
+    varying = set(m["column_defaults"]) | set(m["generated_columns"])
+    cols = [n for n in _phys_names(t, last).values() if n not in varying]
+    ins, dels = split(t.changes_with_type(0, last), cols)
+    _assert_same_multiset(
+        ins, dels.unionAll(t.read(last).select(*cols)), f"window (0, {last}]"
+    )
 
 
 def test_continuous_aggregate_with_deletes_tracks_live_snapshot(spark, root, tmp_path):
@@ -247,20 +337,26 @@ def test_commit_replace_keys_atomic_slice_replace(spark, root):
     ]
 
 
-def test_multikey_delete_prune_guard_never_prunes_wrong_column(spark, root):
+def test_multikey_delete_prune_guard_never_prunes_wrong_column(
+    spark, root, monkeypatch
+):
     """A commit introducing delete entries on DIFFERENT key columns,
     where the first (sort-ordered) entry's key file is EMPTY, must not
     prune candidate files against the wrong column (ADVICE r4 #3 —
     previously the empty first file left ``vals`` falsy, so the second
     entry's values pruned against entry #1's column and silently
-    dropped retraction rows). Pruning now aborts whenever entries
-    disagree on the key column."""
+    dropped retraction rows). The change-feed planner's stats pruning
+    aborts whenever entries disagree on the key column."""
     import os
 
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from unity_to_bigquery_spark.plans.versioned import DATA_DIR
+    from unity_to_bigquery_spark.sources.versioned_stream import (
+        VersionedTableStreamReader,
+    )
 
     t = VersionedTable(spark, root)
     t.commit_append(
@@ -287,11 +383,20 @@ def test_multikey_delete_prune_guard_never_prunes_wrong_column(spark, root):
         {"file": "a-empty-k.parquet", "key": "k", "version": 2},
         {"file": "b-keys-j.parquet", "key": "j", "version": 2},
     ]
-    frames = t._cdc_commit_frames(m1, m2, 2)
+    schema = StructType(
+        t.read().schema.fields
+        + [StructField(CT, StringType()), StructField(CV, LongType())]
+    )
+    reader = VersionedTableStreamReader(
+        {"path": root, "emit_change_types": "true"}, schema
+    )
+    # the hand-staged commit is planned, never published
+    monkeypatch.setattr(reader._t, "manifest", {1: m1, 2: m2}.get)
     rows = sorted(
-        tuple(r)
-        for f in frames
-        for r in f.select("k", "j", "v", CT, CV).collect()
+        tuple(r.values())
+        for p in reader._cdc_partitions(1, 2, m2)
+        for batch in reader.read(p)
+        for r in batch.to_pylist()
     )
     # j=200 (value OUTSIDE the data file's k-range [1,2], so pruning
     # against column k would skip the file) must still be retracted
@@ -364,33 +469,25 @@ def test_changes_with_updates_pairs_pre_post_images(spark, root):
 
 
 def test_cdc_window_bounded_and_paging_composes(spark, root):
-    """changes_with_type refuses windows over max_commits (the plan is
-    a union-per-commit — unbounded windows build unbounded unions,
-    VERDICT r4 #6), and paging the backlog in bounded windows yields
-    the IDENTICAL feed: folds over consecutive pages compose exactly."""
-    import pytest as _pytest
-
+    """Paging a backlog in bounded windows yields the IDENTICAL feed as
+    one window over it: folds over consecutive pages compose exactly
+    (what the paged refreshes of the change-feed consumers rely on)."""
     t = VersionedTable(spark, root)
     # 9-commit backlog with a delete mixed in
     for i in range(8):
         t.commit_append(_df(spark, [(i, f"v{i}")]))
     t.commit_delete_where(spark.createDataFrame([(3,)], "k INT"), "k")
 
-    with _pytest.raises(ValueError, match="max_commits"):
-        t.changes_with_type(0, max_commits=4)
-    # explicit opt-up works
     whole = sorted(
         tuple(r)
-        for r in t.changes_with_type(0, max_commits=100)
-        .select("k", "v", CT, CV)
-        .collect()
+        for r in t.changes_with_type(0).select("k", "v", CT, CV).collect()
     )
     # paged consumption: 3 windows of <= 4 commits each
     paged = []
     for lo, hi in ((0, 4), (4, 8), (8, 9)):
         paged.extend(
             tuple(r)
-            for r in t.changes_with_type(lo, hi, max_commits=4)
+            for r in t.changes_with_type(lo, hi)
             .select("k", "v", CT, CV)
             .collect()
         )
@@ -418,8 +515,9 @@ def test_versioned_stream_default_pacing_is_finite():
 
 def test_continuous_aggregate_pages_long_idle_catchup(spark, root, tmp_path, monkeypatch):
     """ADVICE r5 (medium): a catch-up spanning more commits than
-    CDC_MAX_COMMITS must page, not raise — the documented long-idle
-    continuous-aggregate scenario. Cap shrunk to 2 so 7 backlogged
+    CDC_MAX_COMMITS must page, one atomic commit per page — the
+    documented long-idle continuous-aggregate scenario. Page size
+    shrunk to 2 so 7 backlogged
     commits force 4 pages; the paged result must equal a direct
     groupBy of the live snapshot and stamp the final source version."""
     import pyspark.sql.functions as F
@@ -444,10 +542,7 @@ def test_continuous_aggregate_pages_long_idle_catchup(spark, root, tmp_path, mon
         [(99, 1, 2.25)], "id INT, g INT, x DOUBLE"
     ))
     assert src.latest_version() == 7
-    # direct changes_with_type over the whole window still raises...
-    with pytest.raises(ValueError, match="max_commits"):
-        src.changes_with_type(0, 7)
-    # ...but refresh pages through it
+    # refresh pages through the backlog
     assert agg.refresh() == 7
     direct = src.read().groupBy("g").agg(
         F.count(F.lit(1)).alias("n"),

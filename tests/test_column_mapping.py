@@ -96,6 +96,12 @@ def test_drop_and_readd_column(spark, root):
     assert cm["w"]["phys"] != "w"  # retired slot not reused
     with pytest.raises(ValueError, match="no column"):
         t.drop_column("ghost")
+    # the metadata-only add_column takes a fresh slot the same way
+    t.drop_column("v")
+    t.add_column("v", "string")
+    cm = {e["name"]: e for e in t.column_mapping()}
+    assert cm["v"]["phys"] not in ("v", cm["w"]["phys"])
+    assert {r.k: r.v for r in t.read().collect()} == {1: None, 2: None, 3: None}
 
 
 def test_cdc_across_rename_normalizes_by_field_id(spark, root):

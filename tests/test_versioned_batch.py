@@ -350,3 +350,26 @@ def test_readers_reject_files_predating_a_generated_column(spark, root):
     want = sorted(map(tuple, t.read().collect()))
     assert want == [(1, 2, 3), (3, 4, 7)]
     assert sorted(map(tuple, _ds(spark, root).collect())) == want
+
+
+def test_change_feed_fills_generated_columns_where_it_can(spark, root):
+    """The change-feed relation refuses only a declared generated column
+    that a planned read cannot fill: a file older than the column, read
+    as of a version at or after it. Older reads are NULL, as the column
+    did not exist yet; changes_with_type computes the column on the
+    Spark side for every window."""
+    t = VersionedTable(spark, root)
+    t.commit_append(spark.createDataFrame([(1, 2), (3, 4)], "a INT, b INT"))
+    t.add_generated_column("s", "int", "a + b")
+    v = t.commit_append(spark.createDataFrame([(5, 6)], "a INT, b INT"))
+    want = [(1, 2, None, "insert", 1), (3, 4, None, "insert", 1),
+            (5, 6, 11, "insert", v)]
+    cdf = _ds(spark, root, readChangeFeed="true", startingVersion=0)
+    assert sorted(map(tuple, cdf.collect()), key=repr) == want
+    assert sorted(map(tuple, t.changes_with_type(0).collect()), key=repr) == want
+    t.commit_delete_where(spark.createDataFrame([(1,)], "a INT"), "a")
+    with pytest.raises(Exception, match="generated column 's'"):
+        _ds(spark, root, readChangeFeed="true", startingVersion=v).collect()
+    assert [tuple(r) for r in t.changes_with_type(v).collect()] == [
+        (1, 2, 3, "delete", v + 1)
+    ]

@@ -212,11 +212,11 @@ class ContinuousAggregate:
 
         A catch-up longer than ``max_commits`` (default
         ``VersionedTable.CDC_MAX_COMMITS``) is PAGED: each page folds
-        ≤max_commits commits in its own atomic merge commit, so the
-        long-idle scenario never hits the CDC window cap and a crash
-        between pages resumes from the last committed page (folds over
-        consecutive pages compose exactly — the CDC-level composition
-        is unit-tested in test_cdc_retractions)."""
+        ≤max_commits commits in its own atomic merge commit, so a crash
+        between pages resumes from the last committed page instead of
+        redoing the whole backlog (folds over consecutive pages compose
+        exactly — the CDC-level composition is unit-tested in
+        test_cdc_retractions)."""
         page = (
             VersionedTable.CDC_MAX_COMMITS if max_commits is None else max_commits
         )
@@ -367,7 +367,7 @@ class ContinuousAggregate:
         )
         if use_signed:
             d = self._delta_agg_signed(
-                self.source.changes_with_type(last, now, max_commits=now - last)
+                self.source.changes_with_type(last, now)
             )
         else:
             d = self._delta_agg(self.source.changes(last, now))

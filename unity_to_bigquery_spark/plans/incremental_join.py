@@ -185,8 +185,9 @@ class IncrementalJoinView:
         """Fold all unseen commits on BOTH sides into the view; returns
         the (A, B) version pair now reflected. No-op when current —
         and when replayed (per-step txn bookmarks). Backlogs page at
-        ``max_commits`` commits per side per atomic commit, resumable
-        between pages.
+        ``max_commits`` (default ``VersionedTable.CDC_MAX_COMMITS``)
+        commits per side per atomic commit, so a crash between pages
+        resumes from the last committed page.
 
         ``to_a``/``to_b`` pin a side's fold to an exact source version
         (a CDC-stream micro-batch boundary — the streaming maintenance
@@ -252,9 +253,7 @@ class IncrementalJoinView:
         """One atomic page: replace the view slice of every net-changed
         key on this side with its re-join against the other side's
         pinned snapshot."""
-        final = t.changes_final_state(
-            key, since, upto, max_commits=upto - since
-        ).persist()  # feeds both the replacement rows and the key set
+        final = t.changes_final_state(key, since, upto).persist()  # feeds both the replacement rows and the key set
         try:
             ups = final.filter(
                 F.col(VersionedTable.CDC_TYPE_COL) == "upsert"

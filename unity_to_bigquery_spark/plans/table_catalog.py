@@ -259,7 +259,7 @@ class TableCatalog:
         hi = hi_entry["tables"][name]
         t = VersionedTable(self.spark, self._table_root(name))
         if with_type:
-            return t.changes_with_type(lo, hi, max_commits=max(1, hi - lo))
+            return t.changes_with_type(lo, hi)
         return t.changes(lo, hi)
 
     # ---- SQL front door (round 13, VERDICT r12 #6) ---------------------------

@@ -1548,7 +1548,7 @@ class VersionedTable:
         ``(version_at(ts_from), version_at(ts_to)]``."""
         lo, hi = self.version_at(ts_from), self.version_at(ts_to)
         if with_type:
-            return self.changes_with_type(lo, hi, max_commits=max(1, hi - lo))
+            return self.changes_with_type(lo, hi)
         return self.changes(lo, hi)
 
     def expire_snapshots(
@@ -2493,320 +2493,19 @@ class VersionedTable:
             return None
         return pq.read_table(path, columns=[d[1]]).column(0).to_pylist()
 
-    def _cdc_match_any(self, df: DataFrame, entries: tuple) -> DataFrame:
-        """Rows of ``df`` matched by AT LEAST ONE delete entry, without
-        duplicates: peel entries sequentially (hit rows exit via the
-        semi-join, the anti-joined remainder feeds the next entry), so
-        the union is disjoint — a row matching two entries emits once."""
-        out, remaining = None, df
-        for d in entries:
-            keys = F.broadcast(self._delete_keys({"file": d[0], "key": d[1]}))
-            hit = remaining.join(keys, on=d[1], how="left_semi")
-            out = hit if out is None else out.unionByName(hit)
-            remaining = remaining.join(keys, on=d[1], how="left_anti")
-        return out if out is not None else df.limit(0)
-
-    def _cdc_anti_all(self, df: DataFrame, entries: tuple) -> DataFrame:
-        for d in entries:
-            df = df.join(
-                F.broadcast(self._delete_keys({"file": d[0], "key": d[1]})),
-                on=d[1],
-                how="left_anti",
-            )
-        return df
-
-    def _cdc_commit_frames(self, m_prev: dict, m_v: dict, v: int) -> list[DataFrame]:
-        """Change rows for ONE commit as (frame, is_insert) emissions.
-
-        Per-file formulation that is uniform across every op: for each
-        file, compare the delete-entry set applying to it before (A) vs
-        after (B) the commit.
-
-        - file only in ``m_v``   -> its live-under-B rows are inserts
-        - file only in ``m_prev``-> its live-under-A rows are deletes
-        - file in both, A != B   -> rows live under A but dead under B
-          are deletes (new equality deletes); rows dead under A but
-          live under B are inserts (a restore reverting a delete).
-          A == B contributes nothing and is never scanned.
-
-        Files are grouped by (A, B) signature so plan size is bounded
-        by distinct delete-state transitions, not file count (same
-        bounding argument as ``_scan_live``). For the common pure
-        delete commit (A subset of B, no file churn) the candidate
-        files are additionally pruned by the new keys' distinct/range
-        stats before any scan.
-        """
-        lineage = self._has_lineage(m_v)
-        prev_files = set(m_prev["files"])
-        cur_files = set(m_v["files"])
-        groups: dict[tuple, list[str]] = {}
-        for f in m_prev["files"]:
-            a = self._cdc_applicable(m_prev, f)
-            b = self._cdc_applicable(m_v, f) if f in cur_files else None
-            if b is not None and a == b:
-                continue
-            groups.setdefault((a, b), []).append(f)
-        for f in m_v["files"]:
-            if f not in prev_files:
-                groups.setdefault((None, self._cdc_applicable(m_v, f)), []).append(f)
-        frames: list[DataFrame] = []
-
-        def stamp(df: DataFrame, change: str) -> None:
-            frames.append(
-                df.withColumn(self.CDC_TYPE_COL, F.lit(change)).withColumn(
-                    self.CDC_VERSION_COL, F.lit(v).cast("long")
-                )
-            )
-
-        for (a, b), files in sorted(groups.items(), key=lambda kv: repr(kv[0])):
-            # _scan_pos, not _scan: carried pos-delete pairs must apply
-            # to every per-file CDC scan, or removed files re-emit their
-            # pos-deleted rows as retractions the feed never inserted
-            # (ADVICE r7; _cdc_pos_guard bounds what can appear here)
-            if a is None:
-                stamp(
-                    self._cdc_anti_all(
-                        self._scan_pos(m_v, files, with_lineage=lineage), b
-                    ),
-                    "insert",
-                )
-                continue
-            if b is None:
-                stamp(
-                    self._cdc_anti_all(
-                        self._scan_pos(m_prev, files, with_lineage=lineage), a
-                    ),
-                    "delete",
-                )
-                continue
-            new_entries = tuple(d for d in b if d not in a)
-            gone_entries = tuple(d for d in a if d not in b)
-            if new_entries:
-                cand = files
-                # pruning is sound only when EVERY entry shares one key
-                # column — tracked explicitly (not via `vals` emptiness:
-                # an empty first key file would let a different-keyed
-                # entry's values prune against the wrong column and skip
-                # files that contain matching rows)
-                vals: list = []
-                prunable = True
-                for d in new_entries:
-                    dv = self._cdc_delete_key_values(d)
-                    if dv is None or d[1] != new_entries[0][1]:
-                        prunable = False
-                        break
-                    vals.extend(dv)
-                if prunable and vals:
-                    pruned_m = {"files": cand, "stats": m_v.get("stats", {})}
-                    cand, _ = self._prune_eq(pruned_m, new_entries[0][1], vals)
-                if cand:
-                    live_a = self._cdc_anti_all(
-                        self._scan_pos(m_v, cand, with_lineage=lineage), a
-                    )
-                    stamp(self._cdc_match_any(live_a, new_entries), "delete")
-            if gone_entries:
-                live_b = self._cdc_anti_all(
-                    self._scan_pos(m_v, files, with_lineage=lineage), b
-                )
-                stamp(self._cdc_match_any(live_b, gone_entries), "insert")
-
-        # NEW positional-delete entries (commit_delete_positions): the
-        # killed rows are concrete rows of files live in BOTH manifests
-        # — emit them as full-row 'delete' retractions by semi-joining
-        # the new (file, pos) pairs on _metadata.row_index. Targets only
-        # in m_v (a restore re-adding files + their entry) are covered
-        # by the insert path's _scan_pos; targets removed this commit
-        # are covered by the removed-file delete path. Rows already
-        # pos-dead or equality-dead under m_prev were never live and
-        # are anti-joined out.
-        prev_pairs = {d["file"] for d in m_prev.get("pos_deletes", [])}
-        new_pos = [
-            d for d in m_v.get("pos_deletes", []) if d["file"] not in prev_pairs
-        ]
-        both = prev_files & cur_files
-        pos_targets = sorted({t for d in new_pos for t in d["targets"] if t in both})
-        if pos_targets:
-            pairs = self._pairs_of(new_pos)
-            tgroups: dict[tuple, list[str]] = {}
-            for f in pos_targets:
-                tgroups.setdefault(self._cdc_applicable(m_prev, f), []).append(f)
-            for a, files in sorted(tgroups.items(), key=lambda kv: repr(kv[0])):
-                df = self._scan(
-                    m_prev, files, with_lineage=lineage, with_meta=True
-                )
-                out_cols = [
-                    c for c in df.columns if c not in ("__rel", "__pos")
-                ]
-                df = df.join(F.broadcast(pairs), ["__rel", "__pos"], "left_semi")
-                prior = [
-                    d
-                    for d in m_prev.get("pos_deletes", [])
-                    if any(t in set(files) for t in d["targets"])
-                ]
-                if prior:
-                    df = df.join(
-                        F.broadcast(self._pairs_of(prior)),
-                        ["__rel", "__pos"],
-                        "left_anti",
-                    )
-                stamp(self._cdc_anti_all(df.select(*out_cols), a), "delete")
-
-        # DROPPED positional-delete entries with SURVIVING targets (a
-        # restore to a pre-delete state): the revived rows are concrete
-        # ordinals of files live in both manifests — emit them as
-        # full-row 'insert' rows by semi-joining the dropped (file, pos)
-        # pairs (round 9; this was the last inexpressible commit shape,
-        # the old _cdc_pos_guard raised here). Exclusions keep emissions
-        # exactly-once: ordinals still dead under m_v (kept/re-added
-        # entries) anti-join out; rows equality-dead under the new state
-        # (b) anti-join out; rows matching DROPPED equality entries are
-        # already emitted by the gone_entries insert block above (whose
-        # _scan_pos(m_v) now sees the revived ordinals) and anti-join
-        # out here. Targets removed this commit revive nothing; targets
-        # only in m_v are covered by the insert path's _scan_pos.
-        cur_pair_files = {d["file"] for d in m_v.get("pos_deletes", [])}
-        gone_pos = [
-            d for d in m_prev.get("pos_deletes", [])
-            if d["file"] not in cur_pair_files
-        ]
-        rev_targets = sorted(
-            {t for d in gone_pos for t in d["targets"] if t in both}
-        )
-        if rev_targets:
-            dropped = self._pairs_of(gone_pos)
-            rgroups: dict[tuple, list[str]] = {}
-            for f in rev_targets:
-                a = self._cdc_applicable(m_prev, f)
-                bsig = self._cdc_applicable(m_v, f)
-                rgroups.setdefault((a, bsig), []).append(f)
-            for (a, bsig), files in sorted(
-                rgroups.items(), key=lambda kv: repr(kv[0])
-            ):
-                df = self._scan(
-                    m_v, files, with_lineage=lineage, with_meta=True
-                )
-                out_cols = [
-                    c for c in df.columns if c not in ("__rel", "__pos")
-                ]
-                df = df.join(
-                    F.broadcast(dropped), ["__rel", "__pos"], "left_semi"
-                )
-                still = [
-                    d
-                    for d in m_v.get("pos_deletes", [])
-                    if any(t in set(files) for t in d["targets"])
-                ]
-                if still:
-                    df = df.join(
-                        F.broadcast(self._pairs_of(still)),
-                        ["__rel", "__pos"],
-                        "left_anti",
-                    )
-                gone_eq = tuple(d for d in a if d not in bsig)
-                df = self._cdc_anti_all(df.select(*out_cols), bsig)
-                stamp(self._cdc_anti_all(df, gone_eq), "insert")
-        return frames
-
     # live-content-identical rewrites: the live view before == after,
     # so they emit no change rows (Delta CDF's OPTIMIZE behavior)
     _CDC_NOOP_OPS = ("compact", "cluster_by")
 
-    @staticmethod
-    def _cdc_nested_rename_map(from_cm: list | None, to_cm: list) -> dict:
-        """{frame_column_name: {old_member: new_member}} for struct
-        MEMBERS whose logical name changed between two mappings
-        (matched by top-level then nested field id) — the one-level-
-        down mirror of :meth:`_cdc_rename_map` (round 12). Frames from
-        commits before the nested mapping existed carry the
-        then-current member names, which are exactly the immutable
-        physical names."""
-        out: dict = {}
-        if not from_cm:
-            for e in to_cm:
-                sub = {
-                    n["phys"]: n["name"]
-                    for n in e.get("fields", [])
-                    if n["phys"] != n["name"]
-                }
-                if sub:
-                    out[e["phys"]] = sub
-            return out
-        to_by_id = {e["id"]: e for e in to_cm}
-        for e in from_cm:
-            te = to_by_id.get(e["id"])
-            if te is None or not te.get("fields"):
-                continue
-            if not e.get("fields"):
-                sub = {
-                    n["phys"]: n["name"]
-                    for n in te["fields"]
-                    if n["phys"] != n["name"]
-                }
-            else:
-                t_names = {n["id"]: n["name"] for n in te["fields"]}
-                sub = {}
-                for n in e["fields"]:
-                    tn = t_names.get(n["id"])
-                    if tn is not None and tn != n["name"]:
-                        sub[n["name"]] = tn
-            if sub:
-                out[e["name"]] = sub
-        return out
-
-    @staticmethod
-    def _apply_nested_renames(df: DataFrame, col: str, sub_map: dict) -> DataFrame:
-        from pyspark.sql.types import StructField, StructType
-
-        if col not in df.columns:
-            return df
-        dt = df.schema[col].dataType
-        if not isinstance(dt, StructType):
-            return df
-        src = F.col(col)
-        new_dt = StructType([
-            StructField(sub_map.get(sf.name, sf.name), sf.dataType, sf.nullable)
-            for sf in dt.fields
-        ])
-        rebuilt = F.struct(*[
-            src.getField(sf.name).alias(sub_map.get(sf.name, sf.name))
-            for sf in dt.fields
-        ])
-        return df.withColumn(
-            col,
-            F.when(src.isNull(), F.lit(None).cast(new_dt)).otherwise(rebuilt),
-        )
-
-    @staticmethod
-    def _cdc_rename_map(from_cm: list | None, to_cm: list) -> dict:
-        """{old_logical: target_logical} for fields whose logical name
-        changed between two mappings (matched by field id). Frames from
-        commits BEFORE mapping was enabled carry the enable-time names
-        — which are exactly the entries' immutable PHYSICAL names
-        (enable sets phys = then-current name, and later fields get
-        collision-free phys), so phys -> name is the correct map there.
-        withColumnsRenamed ignores absent keys, so over-approximating
-        with the full map is safe."""
-        if not from_cm:
-            return {e["phys"]: e["name"] for e in to_cm if e["phys"] != e["name"]}
-        to_names = {e["id"]: e["name"] for e in to_cm}
-        return {
-            e["name"]: to_names[e["id"]]
-            for e in from_cm
-            if e["id"] in to_names and to_names[e["id"]] != e["name"]
-        }
-
-    # changes_with_type builds one frame per commit consumed (unioned):
-    # plan size is linear in the window length, so an unbounded window
-    # over a 10k-commit backlog would build a 10k-way union. The guard
-    # turns that into an explicit paging decision instead of a driver
-    # OOM/planner stall discovered in production.
+    # Refresh page size of the change-feed consumers
+    # (ContinuousAggregate, DerivedIndex, IncrementalJoinView): a
+    # backlog folds at most this many commits into ONE atomic,
+    # idempotent commit per page, so a crash mid-catch-up resumes at
+    # the last committed page instead of redoing the whole backlog.
     CDC_MAX_COMMITS = 256
 
     def changes_with_type(
-        self,
-        since_version: int,
-        to_version: int | None = None,
-        max_commits: int | None = None,
+        self, since_version: int, to_version: int | None = None
     ) -> DataFrame:
         """Full change-data-feed with RETRACTIONS — the Delta CDF
         ``_change_type`` protocol (public Delta docs: table_changes /
@@ -2816,112 +2515,106 @@ class VersionedTable:
         effect, so a row delivered in one batch and deleted two commits
         later IS retracted with a ``_change_type='delete'`` row.
 
-        Output = table columns + ``_change_type`` ('insert'|'delete')
-        + ``_commit_version`` (BIGINT). Folding the feed with
-        sign(+1/-1) weights reproduces any per-key aggregate of the
-        live snapshot exactly (ContinuousAggregate.refresh does this);
-        updates surface as delete+insert pairs (rewrite CDC — the
-        format has no row identity). For KEYED tables,
-        :meth:`changes_with_updates` reconstructs Delta-style
-        ``update_preimage``/``update_postimage`` pairs from this feed.
+        Output = ``to_version``'s table columns (then ``__row_id`` when
+        ``to_version`` has row lineage) + ``_change_type``
+        ('insert'|'delete') + ``_commit_version`` (BIGINT). As in
+        Delta's ``table_changes``, the schema is ``to_version``'s: a
+        column dropped inside the window leaves the feed, a renamed one
+        reads under its new name, and a column added inside the window
+        reads NULL (or its initial default) for rows older than it.
+        Folding the feed with sign(+1/-1) weights reproduces any
+        per-key aggregate of the live snapshot exactly
+        (ContinuousAggregate.refresh does this); updates surface as
+        delete+insert pairs (rewrite CDC — the format has no row
+        identity). For KEYED tables, :meth:`changes_with_updates`
+        reconstructs Delta-style ``update_preimage``/
+        ``update_postimage`` pairs from this feed.
 
         Semantics per commit: appends emit their rows as inserts;
         ``delete_where`` emits the then-live rows matching the new keys
         as deletes (earlier deletes already retracted them — no double
         retraction); ``delete_positions`` emits the then-live rows at
-        the deleted (file, row_index) ordinals as full-row deletes
-        (round 8 — derived indexes fold these retractions instead of
-        requiring compact-first); rewrites (overwrite / replace_where / merge_upsert
-        / restore) emit removed files' live rows as deletes and new
-        files' rows as inserts (self-canceling for untouched rows under
-        a signed fold); compact/cluster_by are live-content-identical
-        and emit nothing; restores that REVERT a delete — equality OR
-        positional (round 9: the dropped pair files' ordinals scan as
-        full-row inserts, closing the last inexpressible commit shape)
+        the deleted (file, row_index) ordinals as full-row deletes;
+        rewrites (overwrite / replace_where / merge_upsert / restore)
+        emit removed files' live rows as deletes and new files' rows as
+        inserts (self-canceling for untouched rows under a signed
+        fold); compact/cluster_by are live-content-identical and emit
+        nothing; restores that REVERT a delete — equality or positional
         — emit the revived rows as inserts.
 
-        Scale: driver work is manifest arithmetic; each commit scans
-        only its own delta files (delete commits additionally prune
-        candidates by the delete keys' distinct/range stats before
-        scanning), and delete-key files join broadcast. Plan size is
-        linear in the number of commits consumed, so the window is
-        BOUNDED: more than ``max_commits`` (default
-        ``CDC_MAX_COMMITS``) commits raises — page the backlog in
-        (since, to] windows instead (the folds compose: consuming
-        (0,100] then (100,200] ≡ (0,200], unit-tested), exactly as
-        with Delta CDF batches.
+        The rows are those of the ``readChangeFeed`` relation: its own
+        reader (``sources/versioned_batch.VersionedTableCDFReader``, the
+        one planner and pyarrow executor the CDC stream also uses)
+        plans here on the driver and reads in one ``mapInArrow`` task
+        per planned partition. Going through ``spark.read`` instead
+        would start the Python Data Source API's lookup, create and
+        plan workers, about 3.5 s on a session's first feed. Generated
+        columns are computed here on the Spark side, NULL for commits
+        up to the one that added the column: the pyarrow executor
+        cannot evaluate SQL.
+
+        Scale: planning is manifest arithmetic (each commit reads only
+        its own delta files; delete commits skip files whose stats rule
+        out every new delete key) and the plan is one scan whatever
+        the window's commit count, so the window is unbounded.
         """
+        from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+        from unity_to_bigquery_spark.sources.versioned_batch import (
+            VersionedTableCDFReader,
+        )
+
         to_version = self.latest_version() if to_version is None else to_version
         if to_version < since_version:
             raise NoSuchVersionError(
                 f"to_version {to_version} < since_version {since_version}"
             )
-        cap = self.CDC_MAX_COMMITS if max_commits is None else max_commits
-        if to_version - since_version > cap:
-            raise ValueError(
-                f"changes_with_type window ({since_version}, {to_version}] "
-                f"spans {to_version - since_version} commits > max_commits="
-                f"{cap}: the plan unions one frame per commit, so an "
-                "unbounded window over a long backlog builds an unbounded "
-                "union — page the window (folds over consecutive pages "
-                "compose exactly), or raise max_commits deliberately"
-            )
-        m_prev = self.manifest(since_version)
         m_to = self.manifest(to_version)
-        to_cm = m_to.get("column_mapping")
-        schema = m_prev.get("schema")
-        frames: list[DataFrame] = []
-        for v in range(since_version + 1, to_version + 1):
-            m_v = self.manifest(v)
-            schema = m_v.get("schema") or schema
-            if str(m_v.get("op", "")).startswith(self._CDC_NOOP_OPS):
-                m_prev = m_v
-                continue
-            new_frames = self._cdc_commit_frames(m_prev, m_v, v)
-            # a RENAME inside the window: normalize this commit's
-            # frames to the TARGET version's logical names by field id
-            # (round 10 — CDC across a rename stays typed; columns
-            # dropped by to_version stay under their historical name
-            # and the union NULL-fills, same as additive widening)
-            if to_cm:
-                from_cm = m_v.get("column_mapping")
-                # nested member renames FIRST (they key on this
-                # commit's top-level names), then top-level renames
-                nested_ren = self._cdc_nested_rename_map(from_cm, to_cm)
-                for col_name, sub_map in nested_ren.items():
-                    new_frames = [
-                        self._apply_nested_renames(f, col_name, sub_map)
-                        for f in new_frames
-                    ]
-                ren = self._cdc_rename_map(from_cm, to_cm)
-                if ren:
-                    new_frames = [
-                        f.withColumnsRenamed(ren) for f in new_frames
-                    ]
-            frames.extend(new_frames)
-            m_prev = m_v
-        if not frames:
-            empty = self.spark.createDataFrame([], schema or "__empty STRING")
-            if self._has_lineage(m_to):
-                empty = empty.withColumn(
-                    self.ROW_ID_COL, F.lit(None).cast("long")
-                )
-            return empty.withColumn(
-                self.CDC_TYPE_COL, F.lit(None).cast("string")
-            ).withColumn(self.CDC_VERSION_COL, F.lit(None).cast("long"))
-        from pyspark.sql.types import StructType
+        table = StructType.fromDDL(m_to.get("schema") or "__empty STRING")
+        gens = m_to.get("generated_columns") or {}
+        lineage = self._has_lineage(m_to)
+        extra = [StructField(self.ROW_ID_COL, LongType())] if lineage else []
+        extra += [
+            StructField(self.CDC_TYPE_COL, StringType()),
+            StructField(self.CDC_VERSION_COL, LongType()),
+        ]
+        schema = StructType(
+            [f for f in table.fields if f.name not in gens] + extra
+        )
+        if since_version == to_version:
+            out = self.spark.createDataFrame([], schema)
+        else:
+            options = {
+                "path": self.root,
+                "startingVersion": str(since_version),
+                "endingVersion": str(to_version),
+                "emit_row_ids": str(lineage).lower(),
+            }
+            if isinstance(self, _BranchHandle):
+                options["branch"] = self._name
+            reader = VersionedTableCDFReader(options, schema)
+            parts = reader.partitions()
 
-        out = frames[0]
-        for fdf in frames[1:]:
-            out = out.unionByName(fdf, allowMissingColumns=True)
-        # one column order whatever the window held: to_version's
-        # schema (then the lineage id, as read() places it), columns
-        # dropped inside the window, then the two change columns
-        cdc = (self.CDC_TYPE_COL, self.CDC_VERSION_COL)
-        table_cols = [f.name for f in StructType.fromDDL(m_to["schema"]).fields]
-        head = [c for c in table_cols + [self.ROW_ID_COL] if c in out.columns]
-        dropped = [c for c in out.columns if c not in head and c not in cdc]
-        return out.select(*head, *dropped, *cdc)
+            def read(batches):
+                for b in batches:
+                    for i in b.column(0).to_pylist():
+                        yield from reader.read(parts[i])
+
+            out = self.spark.range(0, len(parts), 1, len(parts)).mapInArrow(
+                read, schema
+            )
+        if not gens:
+            return out
+        cols = [
+            F.when(
+                F.col(self.CDC_VERSION_COL) > int(gens[f.name]["version"]),
+                F.expr(gens[f.name]["sql"]).cast(f.dataType),
+            ).alias(f.name)
+            if f.name in gens
+            else F.col(f.name)
+            for f in table.fields
+        ]
+        return out.select(*cols, *(f.name for f in extra))
 
     def changes_with_updates(
         self,
@@ -2929,7 +2622,6 @@ class VersionedTable:
         since_version: int,
         to_version: int | None = None,
         include_unchanged: bool = False,
-        max_commits: int | None = None,
     ) -> DataFrame:
         """Delta-CDF-style UPDATE pre/post-images over the change feed
         (closes changes_with_type's documented rewrite-CDC limitation
@@ -2956,7 +2648,7 @@ class VersionedTable:
         delta-sized feed — no table scan beyond what changes_with_type
         already does.
         """
-        feed = self.changes_with_type(since_version, to_version, max_commits)
+        feed = self.changes_with_type(since_version, to_version)
         return self.classify_update_images(feed, key, include_unchanged)
 
     @classmethod
@@ -3071,7 +2763,6 @@ class VersionedTable:
         key: str,
         since_version: int,
         to_version: int | None = None,
-        max_commits: int | None = None,
     ) -> DataFrame:
         """NET effect per key over ``(since, to]`` — the shape a KEYED
         derived index (AnnIndex/PqIndex/GramIndex) folds into one
@@ -3084,16 +2775,14 @@ class VersionedTable:
         entirely — ``changes_with_updates``' unchanged-pair filter, so
         downstream refresh cost tracks the REAL delta, not file churn.
 
-        Same key-uniqueness contract and commit-window bounds as
+        Same key-uniqueness contract as
         :meth:`changes_with_updates`. Output = table columns +
         ``_change_type`` ('upsert'|'delete') + ``_commit_version`` (the
         key's last touching commit). The window function partitions by
         key (delta-sized, never corpus-sized)."""
         from pyspark.sql import Window
 
-        feed = self.changes_with_updates(
-            key, since_version, to_version, max_commits=max_commits
-        )
+        feed = self.changes_with_updates(key, since_version, to_version)
         cols = [
             c for c in feed.columns
             if c not in (self.CDC_TYPE_COL, self.CDC_VERSION_COL)
@@ -4206,6 +3895,19 @@ class VersionedTable:
                     out[name] = [min(cur[0], lo), max(cur[1], hi)]
         return out
 
+    @staticmethod
+    def _fresh_phys(m: dict, names: list[str]) -> dict:
+        """``{name: physical slot}`` for columns new to ``m``'s column
+        mapping: the plain name, auto-suffixed when a live or retired
+        field holds that slot. ``_publish_once`` records the choice."""
+        used = {e["phys"] for e in m.get("column_mapping") or []}
+        used |= set(m.get("retired_phys", []))
+        out = {}
+        for c in names:
+            out[c] = c if c not in used else f"{c}_x{uuid.uuid4().hex[:6]}"
+            used.add(out[c])
+        return out
+
     def _write_files(self, df: DataFrame, distribute: bool = True) -> list[str]:
         """Stage immutable data files under a unique txn directory;
         returns root-relative paths. Nothing is visible to readers
@@ -4253,26 +3955,21 @@ class VersionedTable:
         # widening in this commit) fix their physical name NOW —
         # auto-suffixed when the plain name's slot is taken by a live
         # or retired field — and _publish_once records the decision.
-        cm = self.manifest().get("column_mapping")
+        m_cur = self.manifest()
+        cm = m_cur.get("column_mapping")
         self._staged_new_phys = {}
         if cm:
             mapped = {e["name"]: e["phys"] for e in cm}
-            used = set(mapped.values()) | set(
-                self.manifest().get("retired_phys", [])
-            )
-            ren = {}
-            for c in df.columns:
-                if c.startswith(_PART_DIR_PREFIX) or c == self.ROW_ID_COL:
-                    continue
-                if c in mapped:
-                    if mapped[c] != c:
-                        ren[c] = mapped[c]
-                else:
-                    ph = c if c not in used else f"{c}_x{uuid.uuid4().hex[:6]}"
-                    self._staged_new_phys[c] = ph
-                    used.add(ph)
-                    if ph != c:
-                        ren[c] = ph
+            self._staged_new_phys = self._fresh_phys(m_cur, [
+                c for c in df.columns
+                if c not in mapped
+                and c != self.ROW_ID_COL
+                and not c.startswith(_PART_DIR_PREFIX)
+            ])
+            to_phys = {**mapped, **self._staged_new_phys}
+            ren = {
+                c: to_phys[c] for c in df.columns if to_phys.get(c, c) != c
+            }
             if ren:
                 df = df.withColumnsRenamed(ren)
             # nested field-ID mapping (round 12): struct members store
@@ -4866,6 +4563,7 @@ class VersionedTable:
                     **(base.get("column_defaults") or {}),
                     name: entry,
                 }
+            self._staged_new_phys = self._fresh_phys(base, [name])
             try:
                 return self._publish_once(
                     base, base["files"],
@@ -4876,6 +4574,7 @@ class VersionedTable:
                 continue
             finally:
                 self._defaults_override = _UNSET
+                self._staged_new_phys = {}
         raise ConcurrentWriteError(
             "add_column could not publish after 20 attempts"
         )
@@ -4942,6 +4641,7 @@ class VersionedTable:
                     "refs": sorted(refs),
                 },
             }
+            self._staged_new_phys = self._fresh_phys(base, [name])
             try:
                 return self._publish_once(
                     base, base["files"],
@@ -4952,6 +4652,7 @@ class VersionedTable:
                 continue
             finally:
                 self._gens_override = _UNSET
+                self._staged_new_phys = {}
         raise ConcurrentWriteError(
             "add_generated_column could not publish after 20 attempts"
         )

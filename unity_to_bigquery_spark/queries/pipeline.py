@@ -3548,10 +3548,12 @@ def p_versioned_clone(spark, sf_dir):
         "with pushdown=true must return exactly the programmatic rows "
         "for a range predicate AND plan FEWER InputPartitions than the "
         "live file count (manifest-stats file pruning through the "
-        "DSv2 path, asserted in-query); (c) the batch change-feed "
-        "relation (readChangeFeed=true) must equal changes_with_type "
-        "over the same window — batch CDF and streaming CDC share the "
-        "planner, so batch and stream provably agree on one table. "
+        "DSv2 path, asserted in-query); (c) the signed fold of the "
+        "batch change-feed relation (readChangeFeed=true) over the "
+        "delete-and-rename window must equal read(end) minus "
+        "read(start) — an oracle independent of the one change-feed "
+        "planner the relation, the CDC stream and changes_with_type "
+        "share. "
         "The returned aggregate runs through spark.sql on the "
         "registered view and is oracled against DuckDB."
     ),
@@ -3643,24 +3645,41 @@ def p_versioned_sql_select(spark, sf_dir):
         else:
             spark.conf.set("spark.sql.python.filterPushdown.enabled", prev)
 
-    # (c) batch CDF relation == changes_with_type over the delete window
-    cdf = (
+    # (c) the batch CDF relation's signed fold over the delete-and-
+    # rename window == read(end) minus read(start); the rename keeps
+    # column positions, so the start snapshot takes the end's names
+    v_end = t.latest_version()
+    cols = t.read(v_end).columns
+    sign = F.when(F.col("_change_type") == "delete", -1).otherwise(1)
+    fold = (
         spark.read.format("versioned_table")
         .option("path", path)
         .option("readChangeFeed", "true")
         .option("startingVersion", v_full)
+        .option("endingVersion", v_end)
         .load()
+        .groupBy(*cols)
+        .agg(F.sum(sign).alias("n"))
+        .filter("n != 0")
     )
-    bat = t.changes_with_type(v_full)
-    cdf = cdf.persist()
-    bat = bat.persist()
+    snap = (
+        t.read(v_end).withColumn("n", F.lit(1))
+        .unionAll(t.read(v_full).toDF(*cols).withColumn("n", F.lit(-1)))
+        .groupBy(*cols)
+        .agg(F.sum("n").alias("n"))
+        .filter("n != 0")
+    )
+    fold = fold.persist()
+    snap = snap.persist()
     try:
-        cdiff = cdf.exceptAll(bat).unionAll(bat.exceptAll(cdf))
+        cdiff = fold.exceptAll(snap).unionAll(snap.exceptAll(fold))
         if cdiff.limit(1).count():
-            raise RuntimeError("batch CDF diverged from changes_with_type")
+            raise RuntimeError(
+                "batch CDF fold diverged from read(end) minus read(start)"
+            )
     finally:
-        cdf.unpersist()
-        bat.unpersist()
+        fold.unpersist()
+        snap.unpersist()
 
     # the oracled aggregate runs THROUGH the SQL front door
     t.to_view("t_sql_select")

@@ -12,10 +12,9 @@ Reader options:
   ``VersionedTable.version_at``)
 - ``readChangeFeed=true`` + ``startingVersion`` / ``endingVersion`` —
   the batch CDF relation (Delta ``table_changes``): rows carry
-  ``_change_type`` / ``_commit_version``, planned by the SAME
-  per-commit delete-set-diff machinery as the streaming CDC path
-  (``VersionedTableStreamReader._cdc_partitions``) so batch and stream
-  provably agree on one table.
+  ``_change_type`` / ``_commit_version``, planned by the engine's one
+  change-feed planner (``VersionedTableStreamReader._cdc_partitions``),
+  which the CDC stream and ``VersionedTable.changes_with_type`` share.
 - ``pushdown=true`` — opt into filter pushdown (requires
   ``spark.sql.python.filterPushdown.enabled``; see below).
 
@@ -49,9 +48,8 @@ Scale/design notes:
 - ``read()`` executes executor-side in pyarrow and yields Arrow
   RecordBatches under the declared schema (the one executor path,
   shared with the streaming source via ``data_columns``; a declared
-  type with no Arrow equivalent, or a generated column that a live
-  file predates, fails reader construction with a ValueError naming
-  the column). The SQL front door for BULK scans is
+  type with no Arrow equivalent, or a declared generated column that a
+  read file predates, fails with a ValueError naming the column). The SQL front door for BULK scans is
   ``VersionedTable.to_view``/``sql()``, which registers the
   programmatic read (native JVM parquet scan); this relation is the
   portability surface (``spark.read.format``, cross-language SQL,
@@ -123,8 +121,12 @@ class VersionedTableBatchReader(DataSourceReader):
             raise ValueError(
                 f"versioned_table at {self.root} is empty/schemaless"
             )
-        refuse_unfilled_generated(self._m)
+        self._names = schema.fieldNames()
         self._files = list(self._m["files"])
+        fvm = self._m.get("file_versions", {})
+        refuse_unfilled_generated(self._m, self._names, [
+            (fvm.get(f, 0), self._m["version"]) for f in self._files
+        ])
         self._data_dir = os.path.join(self.root, DATA_DIR)
         # multi-file InputPartitions (round 14, VERDICT r13 #2): rows
         # per planned partition; 0 = one partition per live file
@@ -139,8 +141,8 @@ class VersionedTableBatchReader(DataSourceReader):
         phys_of = {
             e["name"]: e["phys"] for e in (m.get("column_mapping") or [])
         }
-        fields = _phys_fields(m)
-        specs = struct_specs(m)
+        fields = _phys_fields(m, self._names)
+        specs = struct_specs(m, self._names)
         fvm = m.get("file_versions", {})
         pos_of = lambda f: [  # noqa: E731
             (abspath(d["file"]), f)
@@ -156,7 +158,7 @@ class VersionedTableBatchReader(DataSourceReader):
             parts.append(
                 _SnapshotFilePartition(
                     abspath(f), fields, anti, pos_of(f), specs,
-                    initial_fills(m, fvm.get(f, 0)),
+                    initial_fills(m, self._names, fvm.get(f, 0)),
                 )
             )
         if not parts:
@@ -276,16 +278,16 @@ class VersionedTableCDFReader(DataSourceReader):
     """Batch change-feed relation (``readChangeFeed=true``): plans with
     the STREAMING CDC planner (``_cdc_partitions``) over
     ``(startingVersion, endingVersion]`` and reads with the streaming
-    executor path — batch CDF and streamed CDC cannot diverge because
-    they are the same code."""
+    executor path — batch CDF, streamed CDC and
+    ``VersionedTable.changes_with_type`` cannot diverge because they
+    are the same code."""
 
     def __init__(self, options, schema):
         root = options["path"]
         so = {"path": root, "emit_change_types": "true"}
-        if options.get("branch"):
-            so["branch"] = options["branch"]
-        if options.get("pack_rows") is not None:
-            so["pack_rows"] = options["pack_rows"]
+        for k in ("branch", "pack_rows", "emit_row_ids"):
+            if options.get(k) is not None:
+                so[k] = options[k]
         self._sr = VersionedTableStreamReader(so, schema)
         self.v1 = int(
             options.get("startingversion", options.get("startingVersion", 0))

@@ -35,8 +35,11 @@ Scale/design notes:
   readChangeFeed analogue): every micro-batch row carries
   ``_change_type`` ('insert'|'delete') and ``_commit_version``, with
   delete commits delivering retraction rows for exactly the then-live
-  rows they killed — same per-file delete-set-diff semantics as the
-  batch ``VersionedTable.changes_with_type``. A signed fold of the
+  rows they killed. ``_cdc_partitions`` is the engine's only change-
+  feed planner: the batch ``readChangeFeed`` relation and
+  ``VersionedTable.changes_with_type`` (which reads that relation)
+  plan through it too, so stream, relation and programmatic feed are
+  one code path. A signed fold of the
   stream reproduces the live snapshot; ``continuous_aggregate_stream``
   pairs this with a handle_deletes ContinuousAggregate. For Delta-CDF-
   style STREAMING update images, apply
@@ -185,47 +188,52 @@ def _ddl_fields(ddl: str) -> list[tuple[str, str]]:
     ]
 
 
-def _phys_fields(m: dict) -> list[str]:
-    """Logical schema field order, translated to the PHYSICAL parquet
-    column names under column mapping (round 10) — physical names are
-    immutable per field, so the end manifest's mapping is correct for
-    every file in the window regardless of renames inside it; the
-    output schema stays logical by position."""
+def _phys_fields(m: dict, names: list[str]) -> list[str]:
+    """The declared top-level ``names``, translated to the PHYSICAL
+    parquet column names under column mapping (round 10) — physical
+    names are immutable per field, so the end manifest's mapping is
+    correct for every file in the window regardless of renames inside
+    it; the output schema stays logical by position."""
     phys = {e["name"]: e["phys"] for e in (m.get("column_mapping") or [])}
-    return [phys.get(n, n) for n, _t in _ddl_fields(m["schema"])]
+    return [phys.get(n, n) for n in names]
 
 
-def struct_specs(m: dict) -> dict[int, list[str]]:
+def struct_specs(m: dict, names: list[str]) -> dict[int, list[str]]:
     """``{field_idx: [physical member names in logical member order]}``
-    for every top-level struct column of ``m``'s schema — the nested
-    field-ID mapping (round 12): a renamed member is read under its
-    immutable physical name and emitted under its logical one."""
+    for every declared ``names`` entry that is a struct column of
+    ``m``'s schema — the nested field-ID mapping (round 12): a renamed
+    member is read under its immutable physical name and emitted under
+    its logical one."""
     nested = {
         e["name"]: {n["name"]: n["phys"] for n in e["fields"]}
         for e in (m.get("column_mapping") or [])
         if e.get("fields")
     }
+    types = dict(_ddl_fields(m["schema"]))
     out: dict[int, list[str]] = {}
-    for i, (name, tstr) in enumerate(_ddl_fields(m["schema"])):
+    for i, name in enumerate(names):
+        tstr = types.get(name, "")
         if tstr.startswith("struct<"):
             sub = nested.get(name, {})
             out[i] = [sub.get(n, n) for n, _t in _ddl_fields(tstr)]
     return out
 
 
-def initial_fills(m: dict, file_version: int, as_of: int | None = None) -> dict:
-    """``{field_idx: value}`` initial defaults (round 12) of ``m``'s
-    schema that apply to a file added at ``file_version``: the column
-    was declared with a default AFTER the file was written and, when
-    ``as_of`` is given, at or before that version (the change feed
-    reads each commit's rows as of that commit). The manifest stores
-    the value evaluated at declare time; struct values key by the
-    declare-time member names, which are the physical names."""
+def initial_fills(
+    m: dict, names: list[str], file_version: int, as_of: int | None = None
+) -> dict:
+    """``{field_idx: value}`` initial defaults (round 12) of the
+    declared ``names`` that apply to a file added at ``file_version``:
+    the column was declared with a default AFTER the file was written
+    and, when ``as_of`` is given, at or before that version (the change
+    feed reads each commit's rows as of that commit). The manifest
+    stores the value evaluated at declare time; struct values key by
+    the declare-time member names, which are the physical names."""
     defaults = m.get("column_defaults") or {}
     if not defaults:
         return {}
     fills = {}
-    for i, (name, _t) in enumerate(_ddl_fields(m["schema"])):
+    for i, name in enumerate(names):
         dinfo = defaults.get(name)
         if dinfo is None:
             continue
@@ -242,21 +250,29 @@ def initial_fills(m: dict, file_version: int, as_of: int | None = None) -> dict:
     return fills
 
 
-def refuse_unfilled_generated(m: dict, after: int = 0) -> None:
-    """Raise a ValueError naming the first generated column that a live
-    file of ``m`` added after version ``after`` predates. Such a file
-    holds no value for the column, and these readers cannot evaluate
-    its Spark SQL expression in pyarrow; ``VersionedTable.read()``
-    computes it at scan."""
-    added = [m.get("file_versions", {}).get(f, 0) for f in m["files"]]
-    added = [v for v in added if not after or v > after]
-    for name, g in (m.get("generated_columns") or {}).items():
-        if any(v < int(g["version"]) for v in added):
-            raise ValueError(
-                f"versioned_table: generated column {name!r} is not stored "
-                "in files written before it was added — read this table "
-                "via the programmatic VersionedTable.read() API"
-            )
+def refuse_unfilled_generated(m: dict, names: list[str], reads) -> None:
+    """Raise a ValueError naming the first declared generated column of
+    ``m`` that some planned read cannot fill. ``reads`` holds one
+    ``(file_version, as_of)`` pair per planned file read: a file written
+    before the column holds no value for it, and these readers cannot
+    evaluate its Spark SQL expression in pyarrow, so such a file read
+    as of a version at or after the column is refused. Read as of an
+    earlier version the column did not exist yet and reads NULL;
+    ``VersionedTable.read()`` and ``changes_with_type`` compute it on
+    the Spark side."""
+    gens = m.get("generated_columns") or {}
+    spans = [(n, int(gens[n]["version"])) for n in names if n in gens]
+    if not spans:
+        return
+    for fv, as_of in reads:
+        for name, gv in spans:
+            if fv < gv <= as_of:
+                raise ValueError(
+                    f"versioned_table: generated column {name!r} is not "
+                    "stored in files written before it was added — read "
+                    "this table via the programmatic VersionedTable.read() "
+                    "API"
+                )
 
 
 def arrow_schema(schema):
@@ -438,7 +454,7 @@ class _CDCFilePartition(InputPartition):
     ``pos_match``: when non-empty, ONLY row ordinals listed in these
     (pairfile_path, target_rel) pairs emit — the rows a
     ``delete_positions`` commit killed, delivered as 'delete'
-    retractions (the batch twin is ``_cdc_commit_frames``' pos block).
+    retractions, or the rows a restore revived, as 'insert' rows.
     ``struct_specs`` / ``fills``: as in ``data_columns``.
     """
 
@@ -518,12 +534,25 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         # rather than silently reading main.
         self.branch = options.get("branch")
         self._t = detached_table(self.root, self.branch)
+        # the declared table columns, ahead of the lineage id and the
+        # change columns: every per-file spec is built from these names
+        self._names = schema.fieldNames()[
+            : len(schema.fields) - self.emit_row_ids - 2 * self.emit_changes
+        ]
         try:
             m = self._t.manifest()
         except FileNotFoundError:
             m = None  # no log yet: no file can predate a generated column
-        if m is not None:
-            refuse_unfilled_generated(m, self.start_version)
+        if m is not None and not self.emit_changes:
+            # the append-only stream reads each live file added after
+            # starting_version as of the head; the change feed checks
+            # its own reads at plan time (_cdc_partitions)
+            fvm = m.get("file_versions", {})
+            refuse_unfilled_generated(m, self._names, [
+                (fvm.get(f, 0), m["version"])
+                for f in m["files"]
+                if not self.start_version or fvm.get(f, 0) > self.start_version
+            ])
         # Validate the bootstrap version eagerly (ADVICE r6): a
         # too-high starting_version would otherwise yield a silently
         # EMPTY stream (latestOffset < initialOffset) — a misconfigured
@@ -609,8 +638,8 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             (d["file"], d.get("key", "#pos"), d["version"])
             for d in (m.get("deletes") or []) + (m.get("pos_deletes") or [])
         }
-        fields = _phys_fields(m_end)
-        specs = struct_specs(m_end)
+        fields = _phys_fields(m_end, self._names)
+        specs = struct_specs(m_end, self._names)
         parts: list[_FilePartition] = []
         m_prev = self._t.manifest(lo)
         for v in range(lo + 1, hi + 1):
@@ -639,7 +668,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             parts.extend(
                 _FilePartition(
                     os.path.join(self.root, DATA_DIR, f), fields, specs,
-                    initial_fills(m_end, fvm.get(f, 0)),
+                    initial_fills(m_end, self._names, fvm.get(f, 0)),
                     row_base=self._row_base_of(m_v, f),
                 )
                 for f in m_v["files"]
@@ -686,17 +715,35 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         return int(b) if b is not None else "null"
 
     def _cdc_partitions(self, lo: int, hi: int, m_end: dict):
-        """Per-commit change partitions — the driver-side mirror of
-        ``VersionedTable.changes_with_type``'s per-file delete-set diff
-        (see its docstring for the semantics argument). One partition
-        per (file, commit) contribution, so reads parallelize across
-        executors exactly like the append-only path."""
+        """Per-commit change partitions over ``(lo, hi]`` — the engine's
+        one change-feed planner (the stream, the ``readChangeFeed``
+        relation and ``VersionedTable.changes_with_type`` all plan
+        here). One partition per (file, commit) contribution, so reads
+        parallelize across executors exactly like the append-only path.
+
+        Per commit, each file compares the delete entries that apply to
+        it before (A) and after (B) the commit:
+
+        - file only after   -> its rows live under B are inserts
+        - file only before  -> its rows live under A are deletes
+        - file in both, A != B -> rows live under A but matching a NEW
+          equality entry are deletes; rows matching a DROPPED entry
+          and live under B are inserts (a restore reverting a delete).
+          A == B contributes nothing and is never read.
+
+        New positional-delete entries emit the killed ordinals of files
+        live on both sides as deletes; dropped ones (a restore) emit
+        the revived ordinals as inserts. compact/cluster_by are
+        live-content-identical and emit nothing. A file is skipped
+        before any read when manifest stats prove that no row matches
+        the commit's new equality-delete keys."""
         import os
 
         from unity_to_bigquery_spark.plans.versioned import DATA_DIR, VersionedTable
 
-        fields = _phys_fields(m_end)
-        specs = struct_specs(m_end)
+        names = self._names
+        fields = _phys_fields(m_end, names)
+        specs = struct_specs(m_end, names)
         abspath = lambda f: os.path.join(self.root, DATA_DIR, f)  # noqa: E731
         # (keyfile_path, keyfile_col, row_col): the delete-key FILE
         # stores its column under the logical name at commit (== the
@@ -708,24 +755,44 @@ class VersionedTableStreamReader(DataSourceStreamReader):
         kf = lambda entries: [  # noqa: E731
             (abspath(d[0]), d[1], phys_of.get(d[1], d[1])) for d in entries
         ]
-        # per-file pos-pair application, the streaming mirror of the
-        # batch _scan_pos fix (ADVICE r7): carried pos-delete entries
-        # must anti-filter every per-file scan, not just trip a length
-        # check
+        # per-file pos-pair application (ADVICE r7): carried pos-delete
+        # entries must anti-filter every per-file read, not just trip a
+        # length check
         posf = lambda m, f: [  # noqa: E731
             (abspath(d["file"]), f)
             for d in m.get("pos_deletes", [])
             if f in d["targets"]
         ]
+        reads: list[tuple[int, int]] = []  # (file_version, as_of) per part
 
         def part(m, as_of, f, change, anti, match_any, pos_match=()):
-            # rows of f as the batch twin scans them under manifest m
-            # (== version as_of): its pos deletes, lineage and defaults
+            # rows of f under manifest m (== version as_of): its pos
+            # deletes, lineage and defaults
             fv = m.get("file_versions", {}).get(f, 0)
+            reads.append((fv, as_of))
             return _CDCFilePartition(
                 abspath(f), fields, change, v, anti, match_any,
                 posf(m, f), list(pos_match), self._row_base_of(m, f),
-                specs, initial_fills(m_end, fv, as_of),
+                specs, initial_fills(m_end, names, fv, as_of),
+            )
+
+        key_vals: dict = {}
+
+        def may_match(m, f, entries) -> bool:
+            # stats pruning is sound only when EVERY new entry shares
+            # one key column (ADVICE r4 #3: an empty first key file
+            # must not let another column's values prune against it)
+            # and each key file is small enough to read here
+            key = entries[0][1]
+            vals: list = []
+            for d in entries:
+                if d[:2] not in key_vals:
+                    key_vals[d[:2]] = self._t._cdc_delete_key_values(d)
+                if key_vals[d[:2]] is None or d[1] != key:
+                    return True
+                vals.extend(key_vals[d[:2]])
+            return not vals or bool(
+                self._t._prune_eq({**m, "files": [f]}, key, vals)[0]
             )
 
         parts: list[_CDCFilePartition] = []
@@ -748,7 +815,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                     continue
                 new_e = tuple(d for d in b if d not in a)
                 gone_e = tuple(d for d in a if d not in b)
-                if new_e:
+                if new_e and may_match(m_v, f, new_e):
                     parts.append(
                         part(m_v, v, f, "delete", kf(a), kf(new_e))
                     )
@@ -763,7 +830,6 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                     )
             # delete_positions commits: one 'delete' partition per live
             # target file, emitting ONLY the newly-killed ordinals
-            # (batch twin: _cdc_commit_frames' pos block)
             prev_pair_files = {d["file"] for d in m_prev.get("pos_deletes", [])}
             new_pos = [
                 d for d in m_v.get("pos_deletes", [])
@@ -787,8 +853,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             # per target emitting ONLY the dropped ordinals, excluding
             # ordinals still dead under m_v and rows matching the new
             # equality state or DROPPED equality entries (the gone_e
-            # insert partition above already emits those) — the exact
-            # streaming twin of the batch revival block (round 9)
+            # insert partition above already emits those) — round 9
             cur_pair_files = {d["file"] for d in m_v.get("pos_deletes", [])}
             gone_pos = [
                 d for d in m_prev.get("pos_deletes", [])
@@ -811,6 +876,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
                     )
                 )
             m_prev = m_v
+        refuse_unfilled_generated(m_end, names, reads)
         return parts
 
     def _read_spec(self, partition):
