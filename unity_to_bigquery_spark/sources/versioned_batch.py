@@ -49,9 +49,10 @@ Scale/design notes:
   RecordBatches under the declared schema (the one executor path,
   shared with the streaming source via ``data_columns``; a declared
   type with no Arrow equivalent, or a declared generated column that a
-  read file predates, fails with a ValueError naming the column). The SQL front door for BULK scans is
-  ``VersionedTable.to_view``/``sql()``, which registers the
-  programmatic read (native JVM parquet scan); this relation is the
+  read file predates, fails with a ValueError naming the column). The
+  SQL front door for BULK scans is ``VersionedTable.to_view``/
+  ``sql()``, which registers the programmatic read (native JVM parquet
+  scan); this relation is the
   portability surface (``spark.read.format``, cross-language SQL,
   pushdown-pruned point reads).
 

@@ -37,8 +37,8 @@ Scale/design notes:
   delete commits delivering retraction rows for exactly the then-live
   rows they killed. ``_cdc_partitions`` is the engine's only change-
   feed planner: the batch ``readChangeFeed`` relation and
-  ``VersionedTable.changes_with_type`` (which reads that relation)
-  plan through it too, so stream, relation and programmatic feed are
+  ``VersionedTable.changes_with_type`` (which drives that relation's
+  reader) plan through it too, so stream, relation and programmatic feed are
   one code path. A signed fold of the
   stream reproduces the live snapshot; ``continuous_aggregate_stream``
   pairs this with a handle_deletes ContinuousAggregate. For Delta-CDF-
