@@ -253,7 +253,8 @@ class IncrementalJoinView:
         """One atomic page: replace the view slice of every net-changed
         key on this side with its re-join against the other side's
         pinned snapshot."""
-        final = t.changes_final_state(key, since, upto).persist()  # feeds both the replacement rows and the key set
+        # feeds both the replacement rows and the key set
+        final = t.changes_final_state(key, since, upto).persist()
         try:
             ups = final.filter(
                 F.col(VersionedTable.CDC_TYPE_COL) == "upsert"
