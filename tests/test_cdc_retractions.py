@@ -517,8 +517,8 @@ def test_continuous_aggregate_pages_long_idle_catchup(spark, root, tmp_path, mon
     """ADVICE r5 (medium): a catch-up spanning more commits than
     CDC_MAX_COMMITS must page, one atomic commit per page — the
     documented long-idle continuous-aggregate scenario. Page size
-    shrunk to 2 so 7 backlogged
-    commits force 4 pages; the paged result must equal a direct
+    shrunk to 2 so 7 backlogged commits force 4 pages; the paged
+    result must equal a direct
     groupBy of the live snapshot and stamp the final source version."""
     import pyspark.sql.functions as F
 

@@ -2548,10 +2548,10 @@ class VersionedTable:
         plans here on the driver and reads in one ``mapInArrow`` task
         per planned partition. Going through ``spark.read`` instead
         would start the Python Data Source API's lookup, create and
-        plan workers, about 3.5 s on a session's first feed. Generated
-        columns are computed here on the Spark side, NULL for commits
-        up to the one that added the column: the pyarrow executor
-        cannot evaluate SQL.
+        plan workers, about 3.5 s on a session's first feed (4 cores).
+        Generated columns are computed here on the Spark side, NULL for
+        commits up to the one that added the column: the pyarrow
+        executor cannot evaluate SQL.
 
         Scale: planning is manifest arithmetic (each commit reads only
         its own delta files; delete commits skip files whose stats rule

@@ -52,9 +52,9 @@ Scale/design notes:
   read file predates, fails with a ValueError naming the column). The
   SQL front door for BULK scans is ``VersionedTable.to_view``/
   ``sql()``, which registers the programmatic read (native JVM parquet
-  scan); this relation is the
-  portability surface (``spark.read.format``, cross-language SQL,
-  pushdown-pruned point reads).
+  scan); this relation is the portability surface
+  (``spark.read.format``, cross-language SQL, pushdown-pruned point
+  reads).
 
 Filter pushdown is gated: Spark REFUSES a reader that implements
 ``pushFilters`` when ``spark.sql.python.filterPushdown.enabled`` is

@@ -38,10 +38,10 @@ Scale/design notes:
   rows they killed. ``_cdc_partitions`` is the engine's only change-
   feed planner: the batch ``readChangeFeed`` relation and
   ``VersionedTable.changes_with_type`` (which drives that relation's
-  reader) plan through it too, so stream, relation and programmatic feed are
-  one code path. A signed fold of the
-  stream reproduces the live snapshot; ``continuous_aggregate_stream``
-  pairs this with a handle_deletes ContinuousAggregate. For Delta-CDF-
+  reader) plan through it too, so stream, relation and programmatic
+  feed are one code path. A signed fold of the stream reproduces the
+  live snapshot; ``continuous_aggregate_stream`` pairs this with a
+  handle_deletes ContinuousAggregate. For Delta-CDF-
   style STREAMING update images, apply
   ``VersionedTable.classify_update_images(batch_df, key)`` in
   foreachBatch: micro-batches are commit-aligned (offsets are
@@ -853,7 +853,7 @@ class VersionedTableStreamReader(DataSourceStreamReader):
             # per target emitting ONLY the dropped ordinals, excluding
             # ordinals still dead under m_v and rows matching the new
             # equality state or DROPPED equality entries (the gone_e
-            # insert partition above already emits those) — round 9
+            # insert partition above already emits those)
             cur_pair_files = {d["file"] for d in m_v.get("pos_deletes", [])}
             gone_pos = [
                 d for d in m_prev.get("pos_deletes", [])
